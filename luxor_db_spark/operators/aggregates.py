@@ -17,7 +17,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from luxor_db_spark.catalog import load_table, register_views
+from luxor_db_spark.catalog import (
+    load_table,
+    register_views,
+    scan_splits,
+    table_path,
+)
 from luxor_db_spark.functions.exact import (
     DEC,
     davg,
@@ -849,12 +854,14 @@ def agg_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
     # user_id crosses the exchange (~1 MB at sf0.1 — guide §8's
     # decide-with-small-rows shape), the sketch's own partial aggregation
     # is unchanged, and the guard makes it a structural no-op on any
-    # many-split table (same pattern as sources.multimodal._spread_ids,
-    # judged scale-safe in r13).
+    # many-split table (same pattern as sources.multimodal._doc_ids,
+    # judged scale-safe in r13). Round-robin, not hash on user_id: the
+    # groupBy("d", "bucket") re-shuffles anyway, and a hot user_id would
+    # land in one task. The split count comes from file sizes.
     ids = ev.select("user_id")
     target = spark.sparkContext.defaultParallelism
-    if ids.rdd.getNumPartitions() < target:
-        ids = ids.repartition(target, "user_id")
+    if scan_splits(spark, table_path(sf_dir, "events")) < target:
+        ids = ids.repartition(target)
     allb = ids.select(
         F.posexplode(
             F.array(*[_cms_bucket_col(d) for d in range(4)])

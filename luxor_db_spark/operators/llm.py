@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 from pyspark.sql.window import Window
 
-from luxor_db_spark.catalog import load_table
+from luxor_db_spark.catalog import load_table, scan_splits, table_path
 from luxor_db_spark.functions.exact import q4
 from luxor_db_spark.registry import query
 
@@ -924,7 +924,8 @@ def llm_tfidf_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Two aggregations + a broadcast join on the term dictionary + group-limit
     window. The document-frequency table is vocabulary-sized (small) →
-    broadcast; the corpus-size scalar is a literal cross join.
+    broadcast; the corpus size is a 1-row count aggregate cross-joined as
+    a broadcast, so building the query runs no job.
     """
     d = load_table(spark, sf_dir, "documents")
     tok = d.select(
@@ -932,10 +933,13 @@ def llm_tfidf_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     tf = tok.groupBy("source", "word").agg(F.count(F.lit(1)).alias("tf"))
     df = tok.groupBy("word").agg(F.countDistinct("doc_id").alias("df"))
-    n_docs = d.count()  # scalar; one tiny job, not per-row
-    scored = tf.join(df, "word").withColumn(
-        "raw_score",
-        F.col("tf") * F.log(F.lit(float(n_docs)) / F.col("df")),
+    g = d.agg(F.count(F.lit(1)).cast("double").alias("n_docs"))
+    scored = (
+        tf.join(df, "word")
+        .crossJoin(broadcast(g))
+        .withColumn(
+            "raw_score", F.col("tf") * F.log(F.col("n_docs") / F.col("df"))
+        )
     )
     w = Window.partitionBy("source").orderBy(
         F.col("raw_score").desc(), F.col("word")
@@ -1013,9 +1017,10 @@ def llm_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # interpreted cosines ran on one core at sf0.1. Scale-adaptive: fires
     # only when the scan has fewer partitions than the session (a real
     # embedding table has many splits — structural no-op there), and the
-    # exchanged rows are just (id, vector).
+    # exchanged rows are just (id, vector). The split count comes from
+    # file sizes, not from planning the query.
     target = spark.sparkContext.defaultParallelism
-    if cand.rdd.getNumPartitions() < target:
+    if scan_splits(spark, table_path(sf_dir, "embeddings")) < target:
         cand = cand.repartition(target, F.col("nb_id"))
     scored = (
         cand.join(broadcast(qs), F.col("q_id") != F.col("nb_id"))

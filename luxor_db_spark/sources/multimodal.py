@@ -30,7 +30,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from luxor_db_spark.catalog import load_table
+from luxor_db_spark.catalog import load_table, scan_splits, table_path
 from luxor_db_spark.registry import query
 
 _META_SCHEMA = (
@@ -100,22 +100,23 @@ def _decode_image(payload: bytes) -> tuple[str, int, int]:
     return "unknown", 0, 0
 
 
-def _spread_ids(df: DataFrame) -> DataFrame:
-    """Spread an asset-id frame across the session's cores before the
-    Python synth/decode stages (r13): the sf0.1 documents fixture is one
-    parquet file → ONE scan task, so the whole mapInPandas chain — the
-    only real CPU work in these keys — ran single-threaded (measured:
-    mm_resize 3.5 s/run at 1 task on local[32]). Hash-repartition of the
-    ID COLUMN ONLY (8 bytes/row — the payload is synthesized after the
-    exchange, so no heavy bytes move; guide §8's decide-with-small-rows
-    shape). Scale-adaptive and a no-op at scale: fires only when the
-    scan yields fewer partitions than the session's parallelism, which a
-    100 TB asset table never does."""
-    spark = df.sparkSession
+def _doc_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The documents ``doc_id`` column, spread across the session's cores
+    before the Python synth/decode stages (r13): the sf0.1 documents
+    fixture is one parquet file → ONE scan task, so the whole mapInPandas
+    chain — the only real CPU work in these keys — ran single-threaded
+    (measured: mm_resize 3.5 s/run at 1 task on local[32]). Hash-repartition
+    of the ID COLUMN ONLY (8 bytes/row — the payload is synthesized after
+    the exchange, so no heavy bytes move; guide §8's decide-with-small-rows
+    shape). Scale-adaptive and a no-op at scale: fires only when the scan
+    yields fewer partitions than the session's parallelism, which a 100 TB
+    asset table never does. The split count comes from file sizes
+    (``catalog.scan_splits``), not from planning the query."""
+    d = load_table(spark, sf_dir, "documents").select("doc_id")
     target = spark.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target, df.columns[0])
-    return df
+    if scan_splits(spark, table_path(sf_dir, "documents")) < target:
+        return d.repartition(target, "doc_id")
+    return d
 
 
 def _decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -167,7 +168,7 @@ def mm_decode_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     minimal GIF — so a hash mismatch means the decode path misread or the
     Arrow batch path corrupted real payload bytes.
     """
-    d = _spread_ids(load_table(spark, sf_dir, "documents").select("doc_id"))
+    d = _doc_ids(spark, sf_dir)
     with_media = d.mapInPandas(
         _synth_payload_batches, schema="doc_id long, media binary"
     )
@@ -380,7 +381,7 @@ def mm_decode_image(spark: SparkSession, sf_dir: str) -> DataFrame:
     catalog: payload bytes are created and consumed within one task, never
     shuffled — the exact shape a 100 TB ingest+probe pipeline needs.
     """
-    d = _spread_ids(load_table(spark, sf_dir, "documents").select("doc_id"))
+    d = _doc_ids(spark, sf_dir)
     with_media = d.mapInPandas(
         _synth_payload_batches, schema="doc_id long, media binary"
     )
@@ -518,7 +519,7 @@ def mm_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     one task, never shuffled — the exact shape a 100 TB ingest+resize
     pipeline needs.
     """
-    d = _spread_ids(load_table(spark, sf_dir, "documents").select("doc_id"))
+    d = _doc_ids(spark, sf_dir)
     with_media = d.mapInPandas(
         _synth_png_batches, schema="doc_id long, media binary"
     )
@@ -836,7 +837,7 @@ def mm_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioned catalog: payload bytes are created and consumed within
     one task, never shuffled.
     """
-    d = _spread_ids(load_table(spark, sf_dir, "documents").select("doc_id"))
+    d = _doc_ids(spark, sf_dir)
     with_media = d.mapInPandas(
         _synth_gif_batches, schema="doc_id long, media binary"
     )

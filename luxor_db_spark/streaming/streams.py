@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from luxor_db_spark.catalog import load_table
+from luxor_db_spark.catalog import load_table, parquet_schema
 from luxor_db_spark.functions.exact import dsum, dsum_sql
 from luxor_db_spark.registry import query
 
@@ -44,11 +44,11 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events.parquet as a Structured Streaming file source.
 
     readStream requires a user-supplied schema; rather than hardcode one,
-    sniff the Parquet footer with a (lazy, footer-only) batch read so both
-    fixture generations load: older ones wrote ts as timestamp[ns]
-    (surfaced as raw-nanos LongType under nanosAsLong → converted to µs
-    here, matching DuckDB's ns→µs read), current ones write timestamp[us]
-    (TIMESTAMP_NTZ) directly.
+    sniff the Parquet footer (once per file version, through
+    ``catalog.parquet_schema``) so both fixture generations load: older
+    ones wrote ts as timestamp[ns] (surfaced as raw-nanos LongType under
+    nanosAsLong → converted to µs here, matching DuckDB's ns→µs read),
+    current ones write timestamp[us] (TIMESTAMP_NTZ) directly.
     """
     import os
 
@@ -56,7 +56,7 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     configure(spark)
     path = os.path.join(sf_dir, "events.parquet")
-    raw_schema = spark.read.parquet(path).schema
+    raw_schema = parquet_schema(spark, path)
     if os.path.isdir(path):
         # Spark-written layout (e.g. the tools/scale_curve.py amplified
         # fixtures): events.parquet is a DIRECTORY of part files. Point the
@@ -443,10 +443,10 @@ def _stream_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
         # replay through directory fixtures or explicit staged dirs).
         path = _stage_stream_table(spark, sf_dir, "documents", "doc_id")
         return (
-            spark.readStream.schema(spark.read.parquet(path).schema)
+            spark.readStream.schema(parquet_schema(spark, path))
             .parquet(path)
         )
-    raw_schema = spark.read.parquet(path).schema
+    raw_schema = parquet_schema(spark, path)
     rs = spark.readStream.schema(raw_schema)
     mft = os.environ.get("LUXOR_STREAM_MAX_FILES_PER_TRIGGER")
     if mft:
@@ -618,10 +618,10 @@ def _stream_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
         # _stream_documents).
         path = _stage_stream_table(spark, sf_dir, "embeddings", "vec_id")
         return (
-            spark.readStream.schema(spark.read.parquet(path).schema)
+            spark.readStream.schema(parquet_schema(spark, path))
             .parquet(path)
         )
-    raw_schema = spark.read.parquet(path).schema
+    raw_schema = parquet_schema(spark, path)
     rs = spark.readStream.schema(raw_schema)
     mft = os.environ.get("LUXOR_STREAM_MAX_FILES_PER_TRIGGER")
     if mft:
@@ -1021,30 +1021,48 @@ def stream_dedup_survivors(
     horizon-restricted condemning pairs — checked row for row, so the
     streaming result must be exactly the batch dedup on this corpus.
     """
-    import os
-
-    explicit_dir = staged_dir is not None
-    if staged_dir is None:
-        staged_dir = _stage_flushed_docs(spark, sf_dir)
-    from luxor_db_spark.session import configure
-
-    configure(spark)
-    schema = spark.read.parquet(staged_dir).schema
-    rs = spark.readStream.schema(schema)
-    # The maxFilesPerTrigger TEST HOOK applies only to an EXPLICITLY
-    # passed staged dir (the in-order multi-batch tests hand-stage
-    # doc_id-range-ordered parts): the DEFAULT staging hash-partitions by
-    # doc_id, so its per-file replay would arrive out of event-time
-    # order and the advancing watermark would evict rows the in-order
-    # contract keeps (r13 ADVICE #1). The default dir always drains as
-    # one data batch.
-    mft = os.environ.get("LUXOR_STREAM_MAX_FILES_PER_TRIGGER")
-    if mft and explicit_dir:
-        rs = rs.option("maxFilesPerTrigger", int(mft))
-    docs = rs.parquet(staged_dir)
+    docs = _survivor_docs(spark, sf_dir, staged_dir, "stream_dedup_survivors")
     return _drain(
         _stream_survivors(docs), "stream_dedup_survivors", "append"
     )
+
+
+def _survivor_docs(
+    spark: SparkSession, sf_dir: str, staged_dir: str | None, key: str
+) -> DataFrame:
+    """The (doc_id, text) file-source stream the survivor keys drain: the
+    default flushed-docs staging, or an explicitly passed staged dir.
+
+    The maxFilesPerTrigger TEST HOOK applies only to an EXPLICITLY passed
+    staged dir (the in-order multi-batch tests hand-stage
+    doc_id-range-ordered parts): the DEFAULT staging hash-partitions by
+    doc_id, so its per-file replay would arrive out of event-time order
+    and the advancing watermark would evict rows the in-order contract
+    keeps (r13 ADVICE #1). The default dir always drains as one data
+    batch, and a hook set for it is reported with a RuntimeWarning, so a
+    multi-batch test that forgot ``staged_dir=`` cannot pass hollow."""
+    import os
+    import warnings
+
+    mft = os.environ.get("LUXOR_STREAM_MAX_FILES_PER_TRIGGER")
+    if staged_dir is None:
+        staged_dir = _stage_flushed_docs(spark, sf_dir)
+        if mft:
+            warnings.warn(
+                f"{key}: LUXOR_STREAM_MAX_FILES_PER_TRIGGER={mft} is ignored "
+                "on the default staged dir (its parts are not in event-time "
+                "order); pass staged_dir= to replay files one batch each",
+                RuntimeWarning,
+                stacklevel=3,
+            )
+            mft = None
+    from luxor_db_spark.session import configure
+
+    configure(spark)
+    rs = spark.readStream.schema(parquet_schema(spark, staged_dir))
+    if mft:
+        rs = rs.option("maxFilesPerTrigger", int(mft))
+    return rs.parquet(staged_dir)
 
 
 def _stream_chunk_survivors(docs: DataFrame) -> DataFrame:
@@ -1187,23 +1205,7 @@ def stream_chunk_dedup(
     lower partners (NOT EXISTS) — the streaming result must equal the
     batch horizon-dedup row for row.
     """
-    import os
-
-    explicit_dir = staged_dir is not None
-    if staged_dir is None:
-        staged_dir = _stage_flushed_docs(spark, sf_dir)
-    from luxor_db_spark.session import configure
-
-    configure(spark)
-    schema = spark.read.parquet(staged_dir).schema
-    rs = spark.readStream.schema(schema)
-    # Test hook honored only for explicit staged dirs — the default
-    # staging's parts are hash-partitioned (not event-time-ordered), see
-    # stream_dedup_survivors.
-    mft = os.environ.get("LUXOR_STREAM_MAX_FILES_PER_TRIGGER")
-    if mft and explicit_dir:
-        rs = rs.option("maxFilesPerTrigger", int(mft))
-    docs = rs.parquet(staged_dir)
+    docs = _survivor_docs(spark, sf_dir, staged_dir, "stream_chunk_dedup")
     return _drain(
         _stream_chunk_survivors(docs), "stream_chunk_dedup", "append"
     )

@@ -91,3 +91,20 @@ def assert_parity(sdf, duck_con, sql: str, key: str = "?") -> None:
             f"  spark-only: {diff_s}\n  duck-only:  {diff_d}\n"
             f"  cols: {sorted(s_cols)}"
         )
+
+
+def spark_jobs(spark, fn):
+    """Call ``fn()`` under a fresh job group; return ``(result, number of
+    Spark jobs it started)``, read from the status tracker once the
+    listener bus has delivered every job-start event."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))

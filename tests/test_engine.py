@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import pytest
 
 from luxor_db_spark.engine import LuxorEngine
@@ -1167,7 +1169,7 @@ def test_bench_interleaved_machine_factor_probes(monkeypatch):
 
 def test_operators_md_is_current():
     """r12 verdict task 7: docs/OPERATORS.md is generated from the live
-    registry (key, oracle kind, file:line, docstring line). Committing a
+    registry (key, oracle kind, module, docstring line). Committing a
     registry change without regenerating the index is the drift this
     guards against: regenerate with `python tools/gen_operators.py`."""
     import tools.gen_operators as gen
@@ -1207,3 +1209,69 @@ def test_registry_order_import_history_invariant():
     ).stdout.splitlines()
     assert len(fresh) >= 266
     assert fresh == perturbed
+
+
+# --- catalog: metadata-only construction ------------------------------------
+
+# The repository's committed copy of the seed-42 sf0.01 fixture tables.
+_SF0_01 = str(Path(__file__).resolve().parents[1] / "perfbench/data/sf0.01")
+
+
+def test_second_load_table_starts_no_job(spark, sf_dir):
+    """Only the first load of a file version infers its schema (a Spark
+    job); every later load reads with the cached schema and starts none."""
+    from luxor_db_spark.catalog import load_table
+    from tests.conftest import spark_jobs
+
+    load_table(spark, sf_dir, "orders")
+    df, jobs = spark_jobs(spark, lambda: load_table(spark, sf_dir, "orders"))
+    assert jobs == 0, f"second load_table started {jobs} Spark job(s)"
+    assert "o_orderkey" in df.columns
+
+
+def test_load_table_sees_rewritten_schema(spark, tmp_path):
+    """The schema memo is keyed on the file version: rewriting a table at
+    the same path with another schema is never read with the stale one."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from luxor_db_spark.catalog import load_table, table_path
+
+    path = table_path(str(tmp_path), "region")
+    pq.write_table(pa.table({"r_regionkey": [1, 2]}), path)
+    first = load_table(spark, str(tmp_path), "region")
+    assert first.columns == ["r_regionkey"]
+    pq.write_table(
+        pa.table({"r_regionkey": [1, 2], "r_name": ["a", "b"]}), path
+    )
+    df = load_table(spark, str(tmp_path), "region")
+    assert df.columns == ["r_regionkey", "r_name"]
+    assert sorted(df.collect()) == [(1, "a"), (2, "b")]
+
+
+@pytest.mark.parametrize("max_partition_bytes", [None, "256k"])
+def test_scan_splits_matches_spark(spark, tmp_path, max_partition_bytes):
+    """catalog.scan_splits predicts the scan's partition count from file
+    sizes: it must equal what Spark plans for every fixture table and
+    for a multi-part Spark-written directory, also when a small split
+    size cuts single files into several splits."""
+    import os
+
+    from luxor_db_spark.catalog import TABLES, scan_splits, table_path
+
+    multi = str(tmp_path / "lineitem_parts")
+    lineitem = spark.read.parquet(table_path(_SF0_01, "lineitem"))
+    lineitem.repartition(5).write.parquet(multi)
+    paths = [table_path(_SF0_01, t) for t in TABLES] + [multi]
+    assert all(os.path.exists(p) for p in paths)
+    conf = "spark.sql.files.maxPartitionBytes"
+    saved = spark.conf.get(conf)
+    if max_partition_bytes:
+        spark.conf.set(conf, max_partition_bytes)
+    try:
+        got = {p: scan_splits(spark, p) for p in paths}
+        want = {p: spark.read.parquet(p).rdd.getNumPartitions() for p in paths}
+    finally:
+        spark.conf.set(conf, saved)
+    assert got == want
+    assert want[multi] > 1

@@ -761,3 +761,26 @@ def test_cbo_statistics_feed_the_optimizer(spark, sf_dir):
     finally:
         spark.conf.set("spark.sql.cbo.enabled", cbo_old)
         spark.sql("DROP TABLE IF EXISTS cbo_nation_stats_t")
+
+
+@pytest.mark.parametrize(
+    "key",
+    [
+        "llm_tfidf_topterms",
+        "llm_knn_join",
+        "mm_resize",
+        "mm_decode_meta",
+        "agg_countmin",
+    ],
+)
+def test_construction_runs_no_job(spark, sf_dir, key):
+    """Building these keys is metadata-only: the corpus size is a lazy
+    broadcast aggregate (llm_tfidf_topterms), scan parallelism comes from
+    catalog.scan_splits instead of an rdd probe, and table schemas come
+    from the catalog memo. The first call warms that memo."""
+    from tests.conftest import spark_jobs
+
+    QUERIES[key](spark, sf_dir)
+    df, jobs = spark_jobs(spark, lambda: QUERIES[key](spark, sf_dir))
+    assert jobs == 0, f"{key}: building the query started {jobs} Spark job(s)"
+    assert df.columns

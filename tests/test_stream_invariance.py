@@ -691,3 +691,16 @@ def test_drain_records_batch_and_state_stats(spark, sf_dir):
     assert stats["n_batches"] >= 1
     # complete-mode windowed agg: one state row per emitted window
     assert stats["state_rows_total"] == n
+
+
+def test_survivor_keys_warn_when_split_hook_is_ignored(spark, monkeypatch):
+    """The default staged dir always drains as one batch, so the
+    maxFilesPerTrigger hook set for it must be reported, not silently
+    dropped: a multi-batch test that forgot ``staged_dir=`` would
+    otherwise pass while testing one batch."""
+    from luxor_db_spark.streaming.streams import _survivor_docs
+
+    monkeypatch.setenv(_ENV, "1")
+    with pytest.warns(RuntimeWarning, match="staged_dir="):
+        docs = _survivor_docs(spark, SF_DIR, None, "stream_chunk_dedup")
+    assert docs.isStreaming

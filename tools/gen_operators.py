@@ -4,7 +4,7 @@ task 7).
 
 266 keys are otherwise discoverable only by reading SURVEY.md §2/§2.12
 or the source; this emits one authoritative index — key, oracle kind,
-``file:line``, one-line semantics from the docstring — straight from
+defining module, one-line semantics from the docstring — straight from
 ``load_all_queries()``, so the survey, ledger and registry cannot drift
 without the accompanying test (tests/test_engine.py::
 test_operators_md_is_current) failing.
@@ -56,12 +56,9 @@ def render() -> str:
         "|---|---|---|---|",
     ]
     for key, fn in queries.items():
-        try:
-            src = os.path.relpath(inspect.getsourcefile(fn), REPO)
-            line_no = inspect.getsourcelines(fn)[1]
-            where = f"`{src}:{line_no}`"
-        except (OSError, TypeError):
-            where = "?"
+        # Module only, no line number: an edit that shifts lines must not
+        # make the committed index stale.
+        where = f"`{fn.__module__}`"
         kind = "SQL" if key in ORACLES else "rows"
         desc = _first_doc_line(fn).replace("|", "\\|")
         lines.append(f"| `{key}` | {kind} | {where} | {desc} |")

@@ -86,6 +86,9 @@ _ALLOWED_REPEATS: dict[str, dict[str, tuple[int, str]]] = {
     "llm_near_dup_eval": {
         "documents": (4, "evaluates LSH vs exact Jaccard: two independent pipelines (banded minhash + shingle self-join), each with its 2 join sides, partially deduped by ReusedExchange")
     },
+    "llm_tfidf_topterms": {
+        "documents": (3, "tf and df each read the corpus once; the third read is the 1-row count(*) of the corpus size (no column data), broadcast into the plan so that building the query runs no job")
+    },
     "llm_dedup_near": {
         "documents": (3, "r9 skew-safe df-cap default: the hot-shingle count is a deliberate EXTRA map-side-combinable pass (partial (s,count) rows, immune to posting skew) ahead of the self-join's two sides — the alternative single-exchange window form buffers a Zipf-hot posting list in one task (SCALE.md r9, skew_stress --case dedup_near_cap)")
     },
