@@ -372,8 +372,9 @@ def main() -> None:
         drain_stats = {
             k: v for k, v in LAST_DRAIN_STATS.items() if k in timings
         }
-    except Exception:
-        drain_stats = {}
+    except Exception as e:  # noqa: BLE001
+        drain_stats = {"error": repr(e)}
+        print(f"bench: drain stats unavailable: {e!r}", file=sys.stderr)
     print(
         json.dumps(
             {

@@ -18,6 +18,7 @@ retention; nothing buffers unbounded input.
 from __future__ import annotations
 
 import itertools
+import sys
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -228,9 +229,11 @@ def _drain(df: DataFrame, key: str, mode: str) -> DataFrame:
                         for op in last_state["stateOperators"]
                     )
             LAST_DRAIN_STATS[key] = stats
-        except Exception:
-            # Stats are telemetry; never fail the query over them.
-            pass
+        except Exception as e:  # noqa: BLE001
+            # Stats are telemetry: never fail the query over them, but
+            # publish the failure as the key's stats value.
+            LAST_DRAIN_STATS[key] = {"error": repr(e)}
+            print(f"{key}: drain stats unavailable: {e!r}", file=sys.stderr)
     finally:
         q.stop()
         if pinned is not None and prior is not None:
@@ -1069,10 +1072,10 @@ def _stream_chunk_survivors(docs: DataFrame) -> DataFrame:
     """The surviving-CHUNK pipeline on an already-streaming (doc_id,
     text) source: per-row chunking (16-token spans, `llm_chunk_dedup`'s
     grain) → watermarked left-OUTER cmd5 self-join against in-horizon
-    LOWER (doc_id, chunk_id) partners → windowed per-chunk aggregation
-    that keeps a chunk iff NO condemning partner matched. Factored out
-    (like `_stream_survivors`) so the invariance and state-cleanup
-    tests drive the exact executed pipeline."""
+    LOWER (doc_id, chunk_id) partners, whose null-partner rows are the
+    surviving chunks — one stateful operator. Factored out (like
+    `_stream_survivors`) so the invariance and state-cleanup tests drive
+    the exact executed pipeline."""
     from luxor_db_spark.operators.llm import _CDD_W
 
     d = docs.select(
@@ -1125,22 +1128,14 @@ def _stream_chunk_survivors(docs: DataFrame) -> DataFrame:
             "AND b.ts >= a.ts AND b.ts <= a.ts + INTERVAL 2 HOURS"
         ),
         "leftOuter",
-    ).select(
-        F.col("b.doc_id").alias("doc_id"),
-        F.col("b.chunk_id").alias("chunk_id"),
-        F.col("b.cmd5").alias("cmd5"),
-        F.col("b.ts").alias("ts"),
-        F.col("a.doc_id").isNotNull().cast("int").alias("condemned"),
     )
-    return (
-        j.groupBy(F.window("ts", "1 hour"), "doc_id", "chunk_id", "cmd5")
-        .agg(F.max("condemned").alias("any_hit"))
-        .filter(
-            (F.col("any_hit") == 0)
-            & (F.col("doc_id") != _SURVIVOR_FLUSH_ID)
-        )
-        .select("doc_id", "chunk_id", "cmd5")
-    )
+    # b holds one row per (doc_id, chunk_id), and the left-outer join
+    # emits a left row's null-padded row at eviction only if it never
+    # matched: the null-partner rows ARE the survivors, each exactly once.
+    return j.filter(
+        F.col("a.doc_id").isNull()
+        & (F.col("b.doc_id") != _SURVIVOR_FLUSH_ID)
+    ).select("b.doc_id", "b.chunk_id", "b.cmd5")
 
 
 def _stream_chunk_oracle() -> str:
@@ -1186,20 +1181,23 @@ def stream_chunk_dedup(
 
     Mechanics: shuffle-free per-row chunking (sequence → explode →
     slice, the `llm_chunk_dedup` grain), then the `_stream_survivors`
-    machinery at chunk grain — watermarked left-OUTER cmd5 self-join
+    join at chunk grain — ONE watermarked left-OUTER cmd5 self-join
     with the lower-(doc_id, chunk_id) and horizon conditions IN the
-    join (a null partner means "no condemning chunk in this
-    fingerprint-epoch"), chained into a windowed per-chunk aggregation
-    (multi-stateful append mode) keeping unmatched chunks. State on
-    both sides is watermark-bounded by the ts-range conjuncts; the hot
-    fingerprint (the empty chunk, boilerplate headers) is capped per
-    epoch by the time-epoch key fragmentation, and only (cmd5, ids, ts)
-    tuples ever enter state — the text never leaves its chunking task.
+    join. The survivor side holds one row per chunk, and the join emits
+    a null-partner row only for a row the watermark evicts unmatched, so
+    those rows are the surviving chunks, each once (no per-chunk
+    aggregation, unlike the per-doc one of `stream_dedup_survivors`).
+    State on both sides is watermark-bounded by the ts-range conjuncts;
+    the hot fingerprint (the empty chunk, boilerplate headers) is capped
+    per epoch by the time-epoch key fragmentation, and only (cmd5, ids,
+    ts) tuples ever enter state — the text never leaves its chunking
+    task.
 
     Finite-fixture plumbing: same far-future sentinel flush as
-    `stream_dedup_survivors` (outer-join nulls and window results emit
-    only once the watermark passes them); a real stream needs no
-    sentinel, later traffic is the flush.
+    `stream_dedup_survivors`, but the watermark only has to pass the
+    join's eviction horizon (outer-join nulls emit only once the
+    watermark passes it); a real stream needs no sentinel, later
+    traffic is the flush.
 
     Oracle: the batch chunk inventory anti-joined against in-horizon
     lower partners (NOT EXISTS) — the streaming result must equal the

@@ -404,13 +404,15 @@ def test_stream_survivors_inorder_multibatch_equals_single(
 # bounded-state obligations, chunking done in-flight.
 
 
-def test_stream_chunk_state_cleanup_and_chained_stateful_plan(spark):
+def test_stream_chunk_state_cleanup_and_single_stateful_plan(spark):
     """The executed plan of the REAL pipeline (`_stream_chunk_survivors`
     — the exact DataFrame the registered key drains) must carry the
     outer join with ts-derived state-cleanup predicates on BOTH sides
     (the cmd5 equality and the composite lower-(doc_id, chunk_id)
-    disjunction must not break eviction extraction) plus the chained
-    streaming aggregation."""
+    disjunction must not break eviction extraction), and that join must
+    be its ONLY stateful operator: the null-partner rows are already the
+    survivors, so a streaming aggregation behind it would only add a
+    state store, a shuffle and a stage to every micro-batch."""
     from luxor_db_spark.streaming.streams import (
         _stream_chunk_survivors,
         _stream_documents,
@@ -431,9 +433,11 @@ def test_stream_chunk_state_cleanup_and_chained_stateful_plan(spark):
     assert "right value predicate: (ts" in plan, (
         "right-side state eviction predicate missing"
     )
-    assert "StateStoreSave" in plan, (
-        "chained streaming aggregation missing from the executed plan"
+    assert "StateStoreSave" not in plan, (
+        "streaming aggregation chained behind the survivor join"
     )
+    physical = plan[plan.index("== Physical Plan ==") :]
+    assert physical.count("StreamingSymmetricHashJoin") == 1
 
 
 def test_stream_chunk_survivors_superset_of_batch_kept(spark):
@@ -470,11 +474,17 @@ def test_stream_chunk_inorder_multibatch_equals_single(
 ):
     """IN-ORDER delivery across micro-batches preserves the surviving
     chunk set exactly (3 doc_id-range files + flush sentinel last,
-    mtime order = event-time order, one file per trigger)."""
+    mtime order = event-time order, one file per trigger). Both drains
+    emit each (doc_id, chunk_id) at most once — the join's null-partner
+    rows are the output, with no aggregation to fold duplicates — and
+    the default drain runs one data batch plus one flush batch."""
     import glob
     import shutil as _shutil
 
-    from luxor_db_spark.streaming.streams import _SURVIVOR_FLUSH_ID
+    from luxor_db_spark.streaming.streams import (
+        _SURVIVOR_FLUSH_ID,
+        LAST_DRAIN_STATS,
+    )
 
     root = tmp_path_factory.mktemp("chunk_split")
     staged = os.path.join(str(root), "staged")
@@ -508,6 +518,7 @@ def test_stream_chunk_inorder_multibatch_equals_single(
     os.utime(spath, (1_000_400, 1_000_400))
 
     single = _run(spark, SF_DIR, "stream_chunk_dedup")
+    assert LAST_DRAIN_STATS["stream_chunk_dedup"]["n_batches"] == 2
     assert os.environ.get(_ENV) is None
     os.environ[_ENV] = "1"
     try:
@@ -522,6 +533,10 @@ def test_stream_chunk_inorder_multibatch_equals_single(
         )
     finally:
         del os.environ[_ENV]
+    # canonical column order is (chunk_id, cmd5, doc_id)
+    for rows in (single, per_file):
+        ids = [(r[2], r[0]) for r in rows]
+        assert len(set(ids)) == len(ids), "a chunk was emitted twice"
     assert single and per_file == single
 
 
@@ -704,3 +719,24 @@ def test_survivor_keys_warn_when_split_hook_is_ignored(spark, monkeypatch):
     with pytest.warns(RuntimeWarning, match="staged_dir="):
         docs = _survivor_docs(spark, SF_DIR, None, "stream_chunk_dedup")
     assert docs.isStreaming
+
+
+def test_drain_publishes_stats_failure_as_error(
+    spark, sf_dir, monkeypatch, capsys
+):
+    """Drain stats are telemetry: a failure reading them must not fail
+    the query, and must not vanish either — the key's stats become an
+    error value, with a warning on stderr."""
+    from pyspark.sql.streaming.query import StreamingQuery
+
+    from luxor_db_spark.streaming import streams
+
+    def _boom(self):
+        raise RuntimeError("progress unavailable")
+
+    monkeypatch.setattr(StreamingQuery, "recentProgress", property(_boom))
+    streams.LAST_DRAIN_STATS.pop("stream_tumbling", None)
+    assert streams.stream_tumbling(spark, sf_dir).count() > 0
+    stats = streams.LAST_DRAIN_STATS["stream_tumbling"]
+    assert "progress unavailable" in stats["error"]
+    assert "drain stats unavailable" in capsys.readouterr().err

@@ -97,12 +97,13 @@ EXPECTED_FLAT = {
         "(slope -0.02 to x16) is the relevant axis for this key"
     ),
     "stream_chunk_dedup": (
-        "same streaming fixed-overhead class as stream_embed_dedup, "
-        "with TWO stateful operators: per-batch wall is ~2C state-store "
+        "same streaming fixed-overhead class as stream_embed_dedup: "
+        "one stateful outer join, so per-batch wall is ~C state-store "
         "commits while the x16 chunk-join work is microseconds per "
         "partition - measured INVERSE 8.1 s @4 -> 14.2 s @32 at a "
-        "PINNED 2 micro-batches, end-state 2 rows at every core count "
-        "(watermark cleanup holds; r12 batch-normalized run). The "
+        "PINNED 2 micro-batches when a windowed agg was still chained "
+        "behind the join (2C commits), end-state 2 rows at every core "
+        "count (watermark cleanup holds; r12 batch-normalized run). The "
         "data-scaling curve (sf0.001 -> sf0.1 at flat wall, SCALE.md "
         "r11) is the relevant axis"
     ),
@@ -191,7 +192,7 @@ def worker(master: str, sf_dir: str, keys: list[str]) -> int:
     ).save()
     out = {}
     for key in keys:
-        samples, batch_counts, state_rows = [], [], []
+        samples, batch_counts, state_rows, errors = [], [], [], []
         for _ in range(RUNS):
             _streams.LAST_DRAIN_STATS.pop(key, None)
             t0 = time.perf_counter()
@@ -200,10 +201,16 @@ def worker(master: str, sf_dir: str, keys: list[str]) -> int:
             ).save()
             samples.append(time.perf_counter() - t0)
             stats = _streams.LAST_DRAIN_STATS.get(key)
-            if stats is not None:
+            if stats is None:
+                continue
+            if "error" in stats:
+                errors.append(stats["error"])
+            else:
                 batch_counts.append(stats.get("n_batches"))
                 state_rows.append(stats.get("state_rows_total"))
         row = {"s": round(statistics.median(samples), 3)}
+        if errors:
+            row["drain_stats_error"] = errors
         if batch_counts:
             row["n_batches"] = (
                 batch_counts[0]
@@ -363,6 +370,13 @@ def main(argv: list[str]) -> int:
                 results[key]["state_rows"] = {
                     str(c): v for c, v in sr.items()
                 }
+        errors = {
+            str(c): r["drain_stats_error"]
+            for c, r in rows.items()
+            if isinstance(r, dict) and "drain_stats_error" in r
+        }
+        if errors:
+            results[key]["drain_stats_error"] = errors
         print(json.dumps({"key": key, **results[key]}), flush=True)
 
     summary = {
