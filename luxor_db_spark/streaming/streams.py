@@ -17,8 +17,10 @@ retention; nothing buffers unbounded input.
 
 from __future__ import annotations
 
+import contextlib
 import itertools
 import sys
+from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -114,14 +116,24 @@ LAST_DRAIN_STATS: dict[str, dict] = {}
 # Local-fixture state-partition right-sizing (r12 verdict task 3): a
 # stateful micro-batch schedules one task PER shuffle partition PER
 # stateful operator (stream-stream joins keep 4 state stores per
-# partition), and — unlike batch plans — AQE cannot coalesce them, so at
-# fixture scale nearly all of a drain's wall time is empty state-store
-# open/commit cycles, not data work (measured at sf0.1, local[32]: the
-# heavy dedup four took 47.0 s at 32 partitions vs 19.5 s at 8 with
-# identical results and batch counts). Pin streaming drains to a small
-# partition count when running LOCAL; a real cluster deployment is never
-# touched (state partitioning there is a capacity decision, sized to
-# corpus volume, and is locked into the checkpoint on first batch).
+# partition), and — unlike batch plans — AQE cannot coalesce them. Each
+# of those tasks opens and commits its state store, and every commit
+# writes checkpoint files (a delta file and its checksum per store,
+# then the offset/commit log entries per batch). Without native Hadoop
+# IO, each checkpoint file costs process forks: the FileContext-based
+# checkpoint manager's no-overwrite rename checks the destination via
+# ``FileUtil.readLink`` (a forked ``readlink``), and each create forks
+# ``chmod``. So at fixture scale a drain's wall time is mostly those
+# forks, not data work (measured at sf0.1, local[32]: the heavy dedup
+# four took 47.0 s at 32 partitions vs 19.5 s at 8 with identical
+# results and batch counts). Two pins attack it (``_drain_confs``):
+# fewer state partitions here, and, on the local filesystem, a
+# checkpoint manager whose rename does not fork
+# (``_FS_CHECKPOINT_MANAGER``). This one clamps
+# streaming drains to a small partition count when running LOCAL; a
+# real cluster deployment is never touched (state partitioning there is
+# a capacity decision, sized to corpus volume, and is locked into the
+# checkpoint on first batch).
 #
 # LUXOR_STREAM_SHUFFLE_PARTITIONS overrides: an integer pins that count
 # (tools/strong_scale.py pins it to the arm's core count so its
@@ -168,6 +180,111 @@ def _stream_shuffle_partitions(
     return str(_STREAM_PARTITIONS_DEFAULT)
 
 
+_CHECKPOINT_MANAGER_CONF = "spark.sql.streaming.checkpointFileManagerClass"
+# Spark's default manager when the conf is unset (CheckpointFileManager
+# .create), and the rename-based one pinned for local checkpoints. On a
+# ``file:`` checkpoint both end in the same rename(2): FileContext's
+# no-overwrite rename is an exists-check then a rename, no more atomic
+# than the FileSystem one (and Spark itself falls back to the latter).
+# The FileSystem manager skips the forked ``readlink`` per rename. Only
+# safe where rename is atomic, so it is pinned per drain on ``file:``
+# checkpoints and never set session-wide.
+_FC_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileContextBasedCheckpointFileManager"
+)
+_FS_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+
+
+def _checkpoint_scheme(
+    spark: SparkSession, checkpoint: str | None = None
+) -> str | None:
+    """URI scheme of the filesystem a streaming query checkpoints to,
+    without instantiating a Hadoop ``FileSystem``.
+
+    ``checkpoint`` is the query's explicit checkpointLocation; when None
+    (memory and foreachBatch sinks), Spark uses the session's
+    ``spark.sql.streaming.checkpointLocation`` or else a local temp dir.
+    A path without a scheme resolves against ``fs.defaultFS``, as Spark
+    qualifies it. None when the session has no JVM handle to ask.
+    """
+    from urllib.parse import urlsplit
+
+    if checkpoint is None:
+        checkpoint = spark.conf.get(
+            "spark.sql.streaming.checkpointLocation", None
+        )
+    scheme = urlsplit(checkpoint).scheme if checkpoint else ""
+    if scheme:
+        return scheme.lower()
+    try:
+        hconf = spark._jsparkSession.sessionState().newHadoopConf()
+        default_fs = hconf.get("fs.defaultFS")
+    except Exception:
+        return None
+    return urlsplit(default_fs).scheme.lower() or None
+
+
+def _drain_confs(
+    spark: SparkSession, key: str, checkpoint: str | None = None
+) -> dict[str, str]:
+    """Session confs to pin while one engine-started streaming query
+    runs: the local state-partition clamp and, for a ``file:``
+    checkpoint, the rename-based checkpoint manager. A manager the
+    session already names, or a non-local checkpoint, is left alone."""
+    confs = {}
+    partitions = _stream_shuffle_partitions(spark, key)
+    if partitions is not None:
+        confs["spark.sql.shuffle.partitions"] = partitions
+    if (
+        spark.conf.get(_CHECKPOINT_MANAGER_CONF, None) is None
+        and _checkpoint_scheme(spark, checkpoint) == "file"
+    ):
+        confs[_CHECKPOINT_MANAGER_CONF] = _FS_CHECKPOINT_MANAGER
+    return confs
+
+
+@contextlib.contextmanager
+def _pinned_drain_confs(
+    spark: SparkSession, key: str, checkpoint: str | None = None
+) -> Iterator[None]:
+    """Pin ``_drain_confs`` around a streaming query's start-to-stop.
+
+    The query captures the confs when its stream thread clones the
+    session (asynchronously, after ``start()``) and locks the partition
+    count into its checkpoint at batch 0, so the session confs are
+    restored only once the query has stopped — exactly: a conf unset
+    before the drain is unset again. A failed pin or restore is printed
+    on stderr, never raised: the query's result does not depend on it,
+    but a leaked drain-only conf must not go unnoticed.
+    """
+    prior: dict[str, str | None] = {}
+    for conf, value in _drain_confs(spark, key, checkpoint).items():
+        try:
+            before = spark.conf.get(conf, None)
+            spark.conf.set(conf, value)
+            prior[conf] = before
+        except Exception as e:  # noqa: BLE001
+            print(f"{key}: could not pin {conf}: {e!r}", file=sys.stderr)
+    try:
+        yield
+    finally:
+        for conf, before in prior.items():
+            try:
+                if before is None:
+                    spark.conf.unset(conf)
+                else:
+                    spark.conf.set(conf, before)
+            except Exception as e:  # noqa: BLE001
+                print(
+                    f"{key}: could not restore {conf}: {e!r}",
+                    file=sys.stderr,
+                )
+
+
 def _drain(df: DataFrame, key: str, mode: str) -> DataFrame:
     """Run a streaming query to completion into a memory sink; return it."""
     spark = df.sparkSession
@@ -179,68 +296,62 @@ def _drain(df: DataFrame, key: str, mode: str) -> DataFrame:
         except Exception:
             pass
     _LAST_SINK_VIEW[key] = name
-    # The streaming query captures spark.sql.shuffle.partitions into its
-    # checkpoint metadata at first batch and keeps it for life, so the
-    # session conf can be restored once the drain completes without
-    # affecting the (already finished) query. Restoring in the finally
-    # block — not right after start() — avoids racing batch 0's conf
-    # capture, which happens asynchronously on the stream thread.
-    pinned = _stream_shuffle_partitions(spark, key)
-    prior = None
-    if pinned is not None:
+    with _pinned_drain_confs(spark, key):
+        q = (
+            df.writeStream.format("memory")
+            .queryName(name)
+            .outputMode(mode)
+            .start()
+        )
         try:
-            prior = spark.conf.get("spark.sql.shuffle.partitions")
-            spark.conf.set("spark.sql.shuffle.partitions", pinned)
-        except Exception:
-            pinned = None
-    q = (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(mode)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        try:
-            prog = q.recentProgress
-            stats: dict = {"n_batches": 0, "state_rows_total": None}
-            if prog:
-                # Count DISTINCT batchIds rather than max+1 (r12 ADVICE
-                # #1): a checkpoint-resumed drain continues numbering
-                # from the checkpoint, so max+1 would report cumulative
-                # batches, skewing s_per_batch normalization. Caveat:
-                # recentProgress is a capped ring buffer (default 100
-                # entries) — far above any fixture drain's batch count,
-                # but a >100-batch replay would undercount.
-                stats["n_batches"] = len(
-                    {int(p["batchId"]) for p in prog}
-                )
-                last_state = next(
-                    (
-                        p
-                        for p in reversed(prog)
-                        if p.get("stateOperators")
-                    ),
-                    None,
-                )
-                if last_state is not None:
-                    stats["state_rows_total"] = sum(
-                        int(op.get("numRowsTotal", 0) or 0)
-                        for op in last_state["stateOperators"]
-                    )
-            LAST_DRAIN_STATS[key] = stats
-        except Exception as e:  # noqa: BLE001
-            # Stats are telemetry: never fail the query over them, but
-            # publish the failure as the key's stats value.
-            LAST_DRAIN_STATS[key] = {"error": repr(e)}
-            print(f"{key}: drain stats unavailable: {e!r}", file=sys.stderr)
-    finally:
-        q.stop()
-        if pinned is not None and prior is not None:
+            q.processAllAvailable()
             try:
-                spark.conf.set("spark.sql.shuffle.partitions", prior)
-            except Exception:
-                pass
+                prog = q.recentProgress
+                stats: dict = {
+                    "n_batches": 0,
+                    "state_rows_total": None,
+                    # The manager this drain ran with, so a timing
+                    # comparison that mixes managers shows it.
+                    "checkpoint_manager": (
+                        spark.conf.get(_CHECKPOINT_MANAGER_CONF, None)
+                        or _FC_CHECKPOINT_MANAGER
+                    ).rsplit(".", 1)[-1],
+                }
+                if prog:
+                    # Count DISTINCT batchIds rather than max+1 (r12
+                    # ADVICE #1): a checkpoint-resumed drain continues
+                    # numbering from the checkpoint, so max+1 would
+                    # report cumulative batches, skewing s_per_batch
+                    # normalization. Caveat: recentProgress is a capped
+                    # ring buffer (default 100 entries) — far above any
+                    # fixture drain's batch count, but a >100-batch
+                    # replay would undercount.
+                    stats["n_batches"] = len(
+                        {int(p["batchId"]) for p in prog}
+                    )
+                    last_state = next(
+                        (
+                            p
+                            for p in reversed(prog)
+                            if p.get("stateOperators")
+                        ),
+                        None,
+                    )
+                    if last_state is not None:
+                        stats["state_rows_total"] = sum(
+                            int(op.get("numRowsTotal", 0) or 0)
+                            for op in last_state["stateOperators"]
+                        )
+                LAST_DRAIN_STATS[key] = stats
+            except Exception as e:  # noqa: BLE001
+                # Stats are telemetry: never fail the query over them,
+                # but publish the failure as the key's stats value.
+                LAST_DRAIN_STATS[key] = {"error": repr(e)}
+                print(
+                    f"{key}: drain stats unavailable: {e!r}", file=sys.stderr
+                )
+        finally:
+            q.stop()
     return df.sparkSession.table(name)
 
 
@@ -1393,11 +1504,12 @@ def stream_foreach_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.write.mode("overwrite").parquet(f"{out}/batch={batch_id}")
 
-    q = ev.writeStream.foreachBatch(write_batch).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    with _pinned_drain_confs(spark, "stream_foreach_batch"):
+        q = ev.writeStream.foreachBatch(write_batch).start()
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
     return (
         spark.read.parquet(f"{out}/batch=*")
         .groupBy("event_type")
@@ -1480,17 +1592,21 @@ def stream_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(src)
             .select("event_id", "user_id", "value")
         )
-        q = (
-            raw.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+        # The sink's own metadata log under ``out`` sits on the same
+        # local filesystem as ``ckpt``, so the manager pinned for the
+        # checkpoint suits it too.
+        with _pinned_drain_confs(spark, "stream_checkpoint_resume", ckpt):
+            q = (
+                raw.writeStream.format("parquet")
+                .option("path", out)
+                .option("checkpointLocation", ckpt)
+                .outputMode("append")
+                .start()
+            )
+            try:
+                q.processAllAvailable()
+            finally:
+                q.stop()
 
     run_once()
     n_first = spark.read.parquet(out).count()

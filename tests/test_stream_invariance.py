@@ -645,6 +645,124 @@ def test_stream_shuffle_partition_clamp_policy(spark, monkeypatch):
         spark.conf.set("spark.sql.shuffle.partitions", prior)
 
 
+def test_stream_checkpoint_manager_policy(spark, monkeypatch):
+    """Without native Hadoop IO, the default FileContext-based checkpoint
+    manager forks ``readlink`` on every checkpoint-file rename, which
+    dominated fixture-scale drains. Engine-started streaming queries pin
+    the rename-based FileSystem manager, but only for a ``file:``
+    checkpoint and only when the session names no manager itself:
+
+    - local session, conf unset           → FileSystem-based manager
+    - explicit ``file:`` / bare local path → FileSystem-based manager
+    - conf already set                    → leave alone
+    - checkpoint on ``hdfs://``           → leave alone, resolved from
+      the URI without instantiating a FileSystem
+    """
+    from luxor_db_spark.streaming import streams
+
+    conf = streams._CHECKPOINT_MANAGER_CONF
+    ckpt_loc = "spark.sql.streaming.checkpointLocation"
+    fs_impl = "fs.hdfs.impl"
+    monkeypatch.delenv("LUXOR_STREAM_SHUFFLE_PARTITIONS", raising=False)
+    hconf = spark.sparkContext._jsc.hadoopConfiguration()
+    assert spark.conf.get(conf, None) is None
+    assert spark.conf.get(ckpt_loc, None) is None
+    assert hconf.get(fs_impl) is None
+    try:
+        pins = streams._drain_confs(spark, "stream_tumbling")
+        assert pins[conf] == streams._FS_CHECKPOINT_MANAGER
+        for local in ("file:///tmp/luxor_ckpt", "/tmp/luxor_ckpt"):
+            pins = streams._drain_confs(spark, "stream_tumbling", local)
+            assert pins[conf] == streams._FS_CHECKPOINT_MANAGER
+
+        spark.conf.set(conf, streams._FC_CHECKPOINT_MANAGER)
+        assert conf not in streams._drain_confs(spark, "stream_tumbling")
+        spark.conf.unset(conf)
+
+        # An unloadable HDFS implementation makes any FileSystem
+        # instantiation for the hdfs scheme fail (and keeps it from
+        # contacting a namenode), so the scheme below can only come
+        # from the URI itself.
+        spark.conf.set(fs_impl, "luxor.test.NoSuchFileSystem")
+        hconf.set(fs_impl, "luxor.test.NoSuchFileSystem")
+        spark.conf.set(ckpt_loc, "hdfs://nn:8020/ckpt")
+        assert streams._checkpoint_scheme(spark) == "hdfs"
+        assert conf not in streams._drain_confs(spark, "stream_tumbling")
+        assert streams._checkpoint_scheme(spark, "s3a://b/ckpt") == "s3a"
+    finally:
+        spark.conf.unset(conf)
+        spark.conf.unset(ckpt_loc)
+        spark.conf.unset(fs_impl)
+        hconf.unset(fs_impl)
+
+
+@pytest.mark.parametrize("user_set", [False, True], ids=["unset", "set"])
+def test_drain_restores_session_conf_exactly(spark, sf_dir, user_set):
+    """The drain pins are drain-only: after a real drain the session
+    conf is exactly what it was — a conf unset before stays unset (not
+    set to its default), and a user-set manager keeps its value and is
+    the one the drain ran with."""
+    from luxor_db_spark.session import configure
+    from luxor_db_spark.streaming import streams
+
+    conf = streams._CHECKPOINT_MANAGER_CONF
+    configure(spark)
+    if user_set:
+        spark.conf.set(conf, streams._FC_CHECKPOINT_MANAGER)
+    try:
+        before = dict(spark.conf.getAll)
+        assert streams.stream_tumbling(spark, sf_dir).count() > 0
+        assert dict(spark.conf.getAll) == before
+        ran_with = streams.LAST_DRAIN_STATS["stream_tumbling"]
+        assert ran_with["checkpoint_manager"] == (
+            "FileContextBasedCheckpointFileManager"
+            if user_set
+            else "FileSystemBasedCheckpointFileManager"
+        )
+    finally:
+        spark.conf.unset(conf)
+
+
+def test_drain_reports_failed_conf_restore(
+    spark, sf_dir, monkeypatch, capsys
+):
+    """A failed restore would leak a drain-only conf into the session:
+    the query still returns, but each failure is printed on stderr
+    rather than swallowed."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    from luxor_db_spark.streaming import streams
+
+    conf = streams._CHECKPOINT_MANAGER_CONF
+    parts = "spark.sql.shuffle.partitions"
+    prior_parts = spark.conf.get(parts)
+    assert spark.conf.get(conf, None) is None
+    real_set = RuntimeConfig.set
+
+    def _set(self, key, value):
+        if key == parts and value == prior_parts:
+            raise RuntimeError("conf store down")
+        return real_set(self, key, value)
+
+    def _unset(self, key):
+        raise RuntimeError("conf store down")
+
+    monkeypatch.setenv("LUXOR_STREAM_SHUFFLE_PARTITIONS", "2")
+    monkeypatch.setattr(RuntimeConfig, "set", _set)
+    monkeypatch.setattr(RuntimeConfig, "unset", _unset)
+    try:
+        assert streams.stream_tumbling(spark, sf_dir).count() > 0
+    finally:
+        monkeypatch.undo()
+        leaked = (spark.conf.get(parts), spark.conf.get(conf, None))
+        spark.conf.set(parts, prior_parts)
+        spark.conf.unset(conf)
+    assert leaked == ("2", streams._FS_CHECKPOINT_MANAGER)
+    err = capsys.readouterr().err
+    assert f"stream_tumbling: could not restore {parts}" in err
+    assert f"stream_tumbling: could not restore {conf}" in err
+
+
 def test_stream_result_invariant_to_state_partition_count(
     spark, sf_dir, monkeypatch
 ):
@@ -706,6 +824,10 @@ def test_drain_records_batch_and_state_stats(spark, sf_dir):
     assert stats["n_batches"] >= 1
     # complete-mode windowed agg: one state row per emitted window
     assert stats["state_rows_total"] == n
+    # local checkpoint, no manager set by the session: the pinned one
+    assert stats["checkpoint_manager"] == (
+        "FileSystemBasedCheckpointFileManager"
+    )
 
 
 def test_survivor_keys_warn_when_split_hook_is_ignored(spark, monkeypatch):

@@ -160,11 +160,11 @@ def worker(master: str, sf_dir: str, keys: list[str]) -> int:
     """Child process: one session at the requested core count, time keys.
 
     Streaming keys additionally report the LAST_DRAIN_STATS of each run
-    (micro-batch count + total state rows): a finite-replay streaming
-    key's wall time is ≈ n_batches × per-batch commit cost + data work,
-    so a cross-core (or cross-round) comparison is only a measurement
-    when n_batches is PINNED — the parent flags any key whose batch
-    count differs across arms (r11 verdict task 3)."""
+    (micro-batch count, total state rows, checkpoint manager): a
+    finite-replay streaming key's wall time is ≈ n_batches × per-batch
+    commit cost + data work, so a cross-core (or cross-round) comparison
+    is only a measurement when n_batches is PINNED — the parent flags
+    any key whose batch count differs across arms (r11 verdict task 3)."""
     cores = master.split("[")[1].rstrip("]")
     # Pin streaming drains' state partitions to the arm's core count:
     # _drain otherwise clamps local streaming to 8 partitions (r12
@@ -193,6 +193,7 @@ def worker(master: str, sf_dir: str, keys: list[str]) -> int:
     out = {}
     for key in keys:
         samples, batch_counts, state_rows, errors = [], [], [], []
+        managers = []
         for _ in range(RUNS):
             _streams.LAST_DRAIN_STATS.pop(key, None)
             t0 = time.perf_counter()
@@ -208,9 +209,14 @@ def worker(master: str, sf_dir: str, keys: list[str]) -> int:
             else:
                 batch_counts.append(stats.get("n_batches"))
                 state_rows.append(stats.get("state_rows_total"))
+                managers.append(stats.get("checkpoint_manager"))
         row = {"s": round(statistics.median(samples), 3)}
         if errors:
             row["drain_stats_error"] = errors
+        if managers:
+            # checkpoint manager the drains ran with: a comparison whose
+            # arms mix managers measures the manager, not core scaling
+            row["checkpoint_manager"] = sorted(set(managers))
         if batch_counts:
             row["n_batches"] = (
                 batch_counts[0]
@@ -370,6 +376,13 @@ def main(argv: list[str]) -> int:
                 results[key]["state_rows"] = {
                     str(c): v for c, v in sr.items()
                 }
+        managers = {
+            str(c): r["checkpoint_manager"]
+            for c, r in rows.items()
+            if isinstance(r, dict) and "checkpoint_manager" in r
+        }
+        if managers:
+            results[key]["checkpoint_manager"] = managers
         errors = {
             str(c): r["drain_stats_error"]
             for c, r in rows.items()
