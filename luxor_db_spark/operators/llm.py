@@ -3463,11 +3463,10 @@ def llm_chunk_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 # would double-count every shared overlap region.
 _CDD_W = 16
 
-
-@query(
-    "llm_chunk_dedup",
-    oracle=f"""
-    WITH d AS (
+# DuckDB twin of `_chunks` over the documents table: CTEs d (doc_id, tok,
+# n) and ch (doc_id, chunk_id, cmd5), shared by the llm_chunk_dedup and
+# stream_chunk_dedup oracles.
+_CHUNKS_DUCK = f"""d AS (
       SELECT doc_id, string_split(coalesce(text, ''), ' ') AS tok,
              len(string_split(coalesce(text, ''), ' ')) AS n
       FROM documents
@@ -3479,7 +3478,39 @@ _CDD_W = 16
                AS cmd5
       FROM d, unnest(generate_series(1, greatest(n, 1), {_CDD_W}))
                AS t(start)
-    ),
+    )"""
+
+
+def _chunks(d: DataFrame, *carry: str) -> DataFrame:
+    """(doc_id, *carry, chunk_id, cmd5) of a (doc_id, tok, n) frame:
+    non-overlapping _CDD_W-token chunks, each fingerprinted by the md5
+    of its joined tokens — a shuffle-free per-row transform (sequence →
+    explode → slice), shared with `stream_chunk_dedup`."""
+    return d.select(
+        "doc_id",
+        *carry,
+        F.explode(
+            F.sequence(
+                F.lit(1), F.greatest(F.col("n"), F.lit(1)), F.lit(_CDD_W)
+            )
+        ).alias("start"),
+        "tok",
+    ).select(
+        "doc_id",
+        *carry,
+        ((F.col("start") - 1) / _CDD_W).cast("int").alias("chunk_id"),
+        F.md5(
+            F.concat_ws(
+                " ", F.slice(F.col("tok"), F.col("start"), F.lit(_CDD_W))
+            )
+        ).alias("cmd5"),
+    )
+
+
+@query(
+    "llm_chunk_dedup",
+    oracle=f"""
+    WITH {_CHUNKS_DUCK},
     ranked AS (
       SELECT doc_id, chunk_id,
              ROW_NUMBER() OVER (PARTITION BY cmd5
@@ -3519,23 +3550,7 @@ def llm_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n"
         ),
     )
-    ch = d.select(
-        "doc_id",
-        F.explode(
-            F.sequence(
-                F.lit(1), F.greatest(F.col("n"), F.lit(1)), F.lit(_CDD_W)
-            )
-        ).alias("start"),
-        "tok",
-    ).select(
-        "doc_id",
-        ((F.col("start") - 1) / _CDD_W).cast("int").alias("chunk_id"),
-        F.md5(
-            F.concat_ws(
-                " ", F.slice(F.col("tok"), F.col("start"), F.lit(_CDD_W))
-            )
-        ).alias("cmd5"),
-    )
+    ch = _chunks(d)
     # Keep-first via min(struct(doc_id, chunk_id)) per fingerprint —
     # map-side combinable, so a corpus-wide hot chunk (the empty chunk,
     # boilerplate headers: 10⁶–10⁸ members at web scale) reduces to one

@@ -4,9 +4,7 @@ Each test pins an equivalence the optimization must preserve:
 - the grow-dictionary solid LZW encoder round-trips through the general
   decoder and matches the old CLEAR-separated stream's decoded output;
 - the repeat-based nearest-neighbor resample equals gather-style fancy
-  indexing element for element (up- and down-scale);
-- the per-process staging memo returns the same directory without
-  re-materializing it.
+  indexing element for element (up- and down-scale).
 """
 
 from __future__ import annotations
@@ -172,40 +170,6 @@ def test_png_filter0_fast_path_matches_general_loop():
     assert np.array_equal(fast, grad)
     assert np.array_equal(slow, grad)
     assert np.array_equal(fast, slow)
-
-
-def test_staged_docs_memoized_per_process(spark, sf_dir):
-    """_stage_flushed_docs stages once per (sf_dir, pid): the second call
-    returns the same directory WITHOUT rewriting it (parquet part mtimes
-    unchanged), and the staged content still carries the flush sentinel."""
-    import os
-
-    from luxor_db_spark.streaming.streams import (
-        _SURVIVOR_FLUSH_ID,
-        _stage_flushed_docs,
-    )
-
-    d1 = _stage_flushed_docs(spark, sf_dir)
-    mtimes = {
-        f: os.path.getmtime(os.path.join(d1, f))
-        for f in os.listdir(d1)
-        if f.endswith(".parquet")
-    }
-    assert mtimes, "staged dir has no parquet parts"
-    d2 = _stage_flushed_docs(spark, sf_dir)
-    assert d2 == d1
-    mtimes2 = {
-        f: os.path.getmtime(os.path.join(d1, f))
-        for f in os.listdir(d1)
-        if f.endswith(".parquet")
-    }
-    assert mtimes2 == mtimes, "second call re-materialized the staged dir"
-    staged = spark.read.parquet(d1)
-    n_docs = staged.count()
-    n_sentinel = staged.where(
-        staged.doc_id == _SURVIVOR_FLUSH_ID
-    ).count()
-    assert n_sentinel == 1 and n_docs > 1
 
 
 def test_resize_counts_cache_is_shape_keyed():

@@ -201,44 +201,6 @@ def test_simhash_eval_broadcast_metric_join_counts(spark, sf_dir):
     assert row.n_true_positive == len(cand & truth)
 
 
-def test_stream_clamp_exempts_python_state_drains(spark, monkeypatch):
-    """r14 (r13 verdict item 2): the local state-partition clamp trims
-    empty state-store commit cycles for JVM-stateful drains, but an
-    applyInPandasWithState drain schedules one PYTHON worker task per
-    partition — clamping cuts its real parallelism (stream_stateful
-    measured 2.57 s at 8 vs 2.22 s at 32; the driver saw 1.77 s at 32 →
-    3.60 s clamped). Python-state drains are exempt; the env override
-    still pins everything."""
-    from luxor_db_spark.streaming import streams
-
-    env = "LUXOR_STREAM_SHUFFLE_PARTITIONS"
-    monkeypatch.delenv(env, raising=False)
-    prior = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "32")
-        assert (
-            streams._stream_shuffle_partitions(spark, "stream_tumbling")
-            == "8"
-        )
-        assert (
-            streams._stream_shuffle_partitions(spark, "stream_stateful")
-            is None
-        )
-        assert (
-            streams._stream_shuffle_partitions(
-                spark, "stream_windowed_topk_bounded"
-            )
-            is None
-        )
-        monkeypatch.setenv(env, "16")
-        assert (
-            streams._stream_shuffle_partitions(spark, "stream_stateful")
-            == "16"
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prior)
-
-
 def test_gif_decode_fixture_payload_unchanged():
     """End-to-end pin over the real synthesized container: decode of a
     make_gif_animated payload still yields the closed-form checksums."""

@@ -122,37 +122,15 @@ def test_stream_simhash_state_cleanup_predicates(spark):
     from pyspark.sql import functions as F
 
     from luxor_db_spark.streaming.streams import (
-        _SIMHASH_ROW_SQL,
-        _stream_documents,
+        _epoch_sides,
+        _simhash_bands,
+        _stream_table,
     )
 
-    docs = _stream_documents(spark, SF_DIR)
-    sig = docs.select(
-        "doc_id",
-        F.timestamp_micros(
-            (F.col("doc_id") * F.lit(60_000_000)).cast("long")
-        ).alias("ts"),
-        F.expr(_SIMHASH_ROW_SQL).alias("simhash"),
-    )
-    blocks = sig.select(
-        "doc_id",
-        "ts",
-        F.posexplode(
-            F.array(
-                *[
-                    F.shiftrightunsigned("simhash", 15 * i).bitwiseAND(
-                        F.lit(0x7FFF).cast("long")
-                    )
-                    for i in range(4)
-                ]
-            )
-        ).alias("blk_i", "blk"),
-    ).withWatermark("ts", "2 hours")
-    epoch = F.floor(F.unix_timestamp("ts") / 7200).cast("long")
-    j = blocks.withColumn("epoch", F.explode(F.array(epoch, epoch + 1))).alias(
-        "a"
-    ).join(
-        blocks.withColumn("epoch", epoch).alias("b"),
+    docs = _stream_table(spark, SF_DIR, "documents", "doc_id")
+    a, b = _epoch_sides(_simhash_bands(docs))
+    j = a.join(
+        b,
         F.expr(
             "a.blk_i = b.blk_i AND a.blk = b.blk AND a.epoch = b.epoch "
             "AND a.doc_id < b.doc_id "
@@ -280,11 +258,13 @@ def test_stream_survivors_state_cleanup_and_chained_stateful_plan(spark):
     window agg; losing either silently degrades to an unbounded or
     never-emitting plan)."""
     from luxor_db_spark.streaming.streams import (
-        _stream_documents,
         _stream_survivors,
+        _stream_table,
     )
 
-    docs = _stream_documents(spark, SF_DIR).select("doc_id", "text")
+    docs = _stream_table(spark, SF_DIR, "documents", "doc_id").select(
+        "doc_id", "text"
+    )
     q = _stream_survivors(docs).writeStream.format("noop").start()
     try:
         q.processAllAvailable()
@@ -415,10 +395,12 @@ def test_stream_chunk_state_cleanup_and_single_stateful_plan(spark):
     state store, a shuffle and a stage to every micro-batch."""
     from luxor_db_spark.streaming.streams import (
         _stream_chunk_survivors,
-        _stream_documents,
+        _stream_table,
     )
 
-    docs = _stream_documents(spark, SF_DIR).select("doc_id", "text")
+    docs = _stream_table(spark, SF_DIR, "documents", "doc_id").select(
+        "doc_id", "text"
+    )
     q = _stream_chunk_survivors(docs).writeStream.format("noop").start()
     try:
         q.processAllAvailable()
@@ -862,3 +844,203 @@ def test_drain_publishes_stats_failure_as_error(
     stats = streams.LAST_DRAIN_STATS["stream_tumbling"]
     assert "progress unavailable" in stats["error"]
     assert "drain stats unavailable" in capsys.readouterr().err
+
+
+def test_drain_reports_failed_prior_sink_drop(
+    spark, sf_dir, monkeypatch, capsys
+):
+    """A failed drop of the same key's prior sink view leaks that sink's
+    rows for the life of the session — the growth ``_LAST_SINK_VIEW``
+    exists to stop. The query still returns, but the failure is printed
+    on stderr rather than swallowed."""
+    from pyspark.sql.catalog import Catalog
+
+    from luxor_db_spark.streaming import streams
+
+    assert streams.stream_tumbling(spark, sf_dir).count() > 0
+    prior = streams._LAST_SINK_VIEW["stream_tumbling"]
+
+    def _boom(self, view_name):
+        raise RuntimeError("catalog down")
+
+    monkeypatch.setattr(Catalog, "dropTempView", _boom)
+    try:
+        assert streams.stream_tumbling(spark, sf_dir).count() > 0
+    finally:
+        monkeypatch.undo()
+        spark.catalog.dropTempView(prior)
+    err = capsys.readouterr().err
+    assert f"stream_tumbling: could not drop prior sink view {prior}" in err
+    assert "catalog down" in err
+
+
+def test_stream_clamp_exempts_python_state_drains(spark, monkeypatch):
+    """r14 (r13 verdict item 2): the local state-partition clamp trims
+    empty state-store commit cycles for JVM-stateful drains, but an
+    applyInPandasWithState drain schedules one PYTHON worker task per
+    partition — clamping cuts its real parallelism (stream_stateful
+    measured 2.57 s at 8 vs 2.22 s at 32; the driver saw 1.77 s at 32 →
+    3.60 s clamped). Python-state drains are exempt; the env override
+    still pins everything."""
+    from luxor_db_spark.streaming import streams
+
+    env = "LUXOR_STREAM_SHUFFLE_PARTITIONS"
+    monkeypatch.delenv(env, raising=False)
+    prior = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        spark.conf.set("spark.sql.shuffle.partitions", "32")
+        assert (
+            streams._stream_shuffle_partitions(spark, "stream_tumbling")
+            == "8"
+        )
+        assert (
+            streams._stream_shuffle_partitions(spark, "stream_stateful")
+            is None
+        )
+        assert (
+            streams._stream_shuffle_partitions(
+                spark, "stream_windowed_topk_bounded"
+            )
+            is None
+        )
+        monkeypatch.setenv(env, "16")
+        assert (
+            streams._stream_shuffle_partitions(spark, "stream_stateful")
+            == "16"
+        )
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prior)
+
+
+@pytest.mark.parametrize("stager", ["flushed_docs", "documents"])
+def test_staged_docs_memoized_per_process(spark, sf_dir, stager):
+    """Both stagers stage once per (sf_dir, pid) through ``_stage_once``:
+    the second call returns the same directory WITHOUT rewriting it
+    (parquet part mtimes unchanged). The flushed-docs copy still carries
+    exactly one flush sentinel; the plain table copy carries none."""
+    from luxor_db_spark.catalog import load_table
+    from luxor_db_spark.streaming.streams import (
+        _SURVIVOR_FLUSH_ID,
+        _stage_flushed_docs,
+        _stage_stream_table,
+    )
+
+    def stage():
+        if stager == "flushed_docs":
+            return _stage_flushed_docs(spark, sf_dir)
+        return _stage_stream_table(spark, sf_dir, "documents", "doc_id")
+
+    d1 = stage()
+    mtimes = {
+        f: os.path.getmtime(os.path.join(d1, f))
+        for f in os.listdir(d1)
+        if f.endswith(".parquet")
+    }
+    assert mtimes, "staged dir has no parquet parts"
+    d2 = stage()
+    assert d2 == d1
+    mtimes2 = {
+        f: os.path.getmtime(os.path.join(d1, f))
+        for f in os.listdir(d1)
+        if f.endswith(".parquet")
+    }
+    assert mtimes2 == mtimes, "second call re-materialized the staged dir"
+    staged = spark.read.parquet(d1)
+    n_docs = staged.count()
+    n_sentinel = staged.where(
+        staged.doc_id == _SURVIVOR_FLUSH_ID
+    ).count()
+    if stager == "flushed_docs":
+        assert n_sentinel == 1 and n_docs > 1
+    else:
+        assert n_sentinel == 0
+        assert n_docs == load_table(spark, sf_dir, "documents").count() > 1
+
+
+# --- the event-time horizon join's epoch fragmentation -----------------------
+# The fixture oracles never put a pair exactly on the 2-hour horizon or
+# across an epoch edge, so these pins use a hand-built static frame.
+
+_H = 3600
+
+
+def _epoch_rows():
+    """(k, id, secs) rows: one pair (or triple) per key k, at Δ = 0,
+    Δ = exactly 2 h, Δ = 2 h + 1 s, straddling an epoch edge (epochs
+    start at multiples of 2 h), Δ = 2 h between two epoch edges, and a
+    triple whose members span two epochs."""
+    return [
+        (1, 1, 1800), (1, 2, 1800),  # Δ = 0
+        (2, 3, 1800), (2, 4, 1800 + 2 * _H),  # Δ = 2 h
+        (3, 5, 1800), (3, 6, 1800 + 2 * _H + 1),  # Δ = 2 h + 1 s
+        (4, 7, 2 * _H - 1), (4, 8, 2 * _H),  # 01:59:59 → 02:00:00
+        (5, 9, 2 * _H - 1), (5, 10, 4 * _H - 1),  # Δ = 2 h, epochs 0 → 1
+        (6, 11, 2 * _H), (6, 12, 4 * _H),  # Δ = 2 h, edge to edge
+        (7, 13, 2 * _H - 1), (7, 14, 4 * _H),  # Δ = 2 h + 1 s, epochs 0 → 2
+        (8, 15, 0), (8, 16, _H), (8, 17, 2 * _H),  # triple
+    ]
+
+
+def _epoch_frame(spark):
+    from pyspark.sql import functions as F
+
+    from luxor_db_spark.streaming.streams import _epoch_sides
+
+    rows = spark.createDataFrame(
+        _epoch_rows(), "k int, id int, secs long"
+    ).select("k", "id", F.timestamp_seconds("secs").alias("ts"))
+    return _epoch_sides(rows)
+
+
+_EPOCH_HORIZON = (
+    "a.k = b.k AND a.epoch = b.epoch AND a.id < b.id "
+    "AND b.ts >= a.ts AND b.ts <= a.ts + INTERVAL 2 HOURS"
+)
+
+
+def _qualifying_pairs():
+    rows = _epoch_rows()
+    return sorted(
+        (x, y)
+        for k1, x, sx in rows
+        for k2, y, sy in rows
+        if k1 == k2 and x < y and 0 <= sy - sx <= 2 * _H
+    )
+
+
+def test_epoch_sides_inner_join_emits_each_pair_once(spark):
+    """Every pair within the horizon — Δ = 0, Δ = exactly 2 h, across
+    an epoch edge — is emitted exactly once, and no pair beyond it."""
+    from pyspark.sql import functions as F
+
+    a, b = _epoch_frame(spark)
+    got = sorted(
+        (r.x, r.y)
+        for r in a.join(b, F.expr(_EPOCH_HORIZON))
+        .select(F.col("a.id").alias("x"), F.col("b.id").alias("y"))
+        .collect()
+    )
+    expected = _qualifying_pairs()
+    assert (1, 2) in expected and (3, 4) in expected and (7, 8) in expected
+    assert (11, 12) in expected and (5, 6) not in expected
+    assert got == expected
+
+
+def test_epoch_sides_left_outer_from_b_one_null_row_per_unmatched(spark):
+    """A left-outer join from ``b`` (the survivor keys' shape) emits
+    exactly one null-partner row per ``b`` row with no qualifying
+    earlier partner, and each qualifying pair once."""
+    from pyspark.sql import functions as F
+
+    a, b = _epoch_frame(spark)
+    out = (
+        b.join(a, F.expr(_EPOCH_HORIZON), "leftOuter")
+        .select(F.col("b.id").alias("y"), F.col("a.id").alias("x"))
+        .collect()
+    )
+    pairs = _qualifying_pairs()
+    matched = {y for _, y in pairs}
+    unmatched = sorted(i for _, i, _ in _epoch_rows() if i not in matched)
+    assert sorted(r.y for r in out if r.x is None) == unmatched
+    assert sorted((r.x, r.y) for r in out if r.x is not None) == pairs
+    assert 6 in unmatched and 14 in unmatched
