@@ -61,6 +61,13 @@ CASE WHEN len({tok}) >= 3 THEN
 ELSE [] END
 """.format(tok=_TOKENS_DUCK)
 
+# (doc_id, s): one row per distinct shingle of each document, the shingle
+# set every DuckDB near-dup oracle starts from.
+_SH_DUCK = (
+    f"SELECT doc_id, unnest(list_distinct({_SHINGLES_DUCK})) AS s "
+    "FROM documents"
+)
+
 
 def _dot(a: Column, b: Column) -> Column:
     """Dot product over float32 arrays in double (zip_with + sequential
@@ -172,6 +179,188 @@ def _docs_tokenized(
     return docs
 
 
+# --- near-dup kernel -------------------------------------------------------
+#
+# One copy of each link of the banded near-dup chain: shingle set →
+# signature → band keys → lowest-shared-band pair emission → exact verify.
+# Cheap band keys prune the candidate pairs and an exact check on the
+# survivors decides (the prune-then-verify shape of REPOSE, ICDE 2021).
+
+# Fixed universal-hash family h_i(t) = (a_i * t + b_i) mod 65537 over 16-bit
+# token ids. Constants are literals so the Spark and DuckDB pipelines are
+# the same function; 16 signatures → 8 bands × 2 rows targets Jaccard ≈ 0.5
+# ((1/8)^(1/2) ≈ 0.35 threshold, steep curve at 0.5+). Every a_i must be
+# nonzero mod 65537: a multiple of p makes h_i the constant b_i mod p, and
+# its band then keys on one hash instead of two.
+_MH = [
+    (12289, 40961), (24593, 49157), (786433, 196613), (3079, 6151),
+    (1543, 389), (98317, 769), (393241, 1572869), (53, 97),
+    (193, 1259), (6291469, 12582917), (25165843, 139), (389, 521),
+    (1031, 2053), (4099, 8209), (16411, 32771), (40503, 131101),
+]
+_MH_P = 65537
+
+
+def _tok16_sql(md5_expr: str) -> str:
+    """16-bit token id from the first 4 md5 hex digits (portable SQL)."""
+    digit = (
+        "CASE WHEN ascii(substr({m}, {i}, 1)) <= 57 "
+        "THEN ascii(substr({m}, {i}, 1)) - 48 "
+        "ELSE ascii(substr({m}, {i}, 1)) - 87 END"
+    )
+    parts = [
+        f"({digit.format(m=md5_expr, i=i)}) * {16 ** (4 - i)}"
+        for i in range(1, 5)
+    ]
+    return "(" + " + ".join(parts) + ")"
+
+
+def _tok16_col(md5_col: Column) -> Column:
+    out = None
+    for i in range(1, 5):
+        c = F.ascii(F.substring(md5_col, i, 1))
+        d = F.when(c <= 57, c - 48).otherwise(c - 87)
+        term = d * (16 ** (4 - i))
+        out = term if out is None else out + term
+    return out
+
+
+def _docsets(d: DataFrame) -> DataFrame:
+    """(doc_id, shs): each document's distinct 3-word shingles as an
+    array, the doc grain the exact verify reads."""
+    return d.select("doc_id", F.array_distinct(F.expr(_SHINGLES)).alias("shs"))
+
+
+def _minhash_sig(d: DataFrame) -> DataFrame:
+    """(doc_id, s0..s15): 16 modular min-hashes of each document's
+    md5-derived 16-bit shingle ids, one grouped aggregation over a
+    (doc_id, tokens) frame. Documents with no shingle have no signature.
+
+    The shingles are exploded from the expression, not from a `_docsets`
+    column: exploding a column makes the optimizer infer a non-empty
+    filter on it and push it into the scan with the shingle expression
+    inlined, which re-splits the text per shingle (measured 1.3 → 5.0 s
+    for `llm_minhash_lsh` at sf0.1)."""
+    ti = d.select(
+        "doc_id", F.explode(F.array_distinct(F.expr(_SHINGLES))).alias("s")
+    ).select("doc_id", _tok16_col(F.md5("s")).cast("bigint").alias("t"))
+    return ti.groupBy("doc_id").agg(
+        *[
+            F.min((F.lit(a).cast("bigint") * F.col("t") + b) % _MH_P).alias(
+                f"s{i}"
+            )
+            for i, (a, b) in enumerate(_MH)
+        ]
+    )
+
+
+def _minhash_band(p: str, j: int) -> str:
+    """SQL for band ``j`` of a minhash signature: rows 2j and 2j+1 packed
+    into one key (both are < `_MH_P`, so equal keys mean equal rows).
+    ``p`` is the column prefix: ``""`` or a join alias such as ``"a."``."""
+    return f"({p}s{2 * j} * {_MH_P} + {p}s{2 * j + 1})"
+
+
+_SIMHASH_BITS = 60  # 15 md5 hex chars — exact in BIGINT in both engines
+
+
+def _simhash_block(col: str, j: int) -> str:
+    """SQL for block ``j`` of the 4 × 15-bit banding of simhash ``col``."""
+    return f"(shiftrightunsigned({col}, {15 * j}) & CAST(32767 AS BIGINT))"
+
+
+def _simhash_sig(d: DataFrame) -> DataFrame:
+    """(doc_id, simhash): the 60-bit sign fingerprint of each document's
+    distinct tokens — per bit, the ±1 majority of the md5-derived token
+    hashes, as one map-combinable groupBy on doc_id."""
+    tok = d.select(
+        "doc_id", F.explode(F.array_distinct(F.col("tokens"))).alias("w")
+    ).withColumn(
+        "h", F.conv(F.substring(F.md5("w"), 1, 15), 16, 10).cast("long")
+    )
+    # One F.expr per bit-sum and ONE for the fingerprint reassembly —
+    # the per-bit pyspark.sql.functions chains cost ~900 py4j round
+    # trips (~1.3 s of driver-side plan construction per invocation).
+    # Set bits have disjoint powers, so + equals the bitwise OR (and
+    # matches the oracle's SUM form).
+    sums = tok.groupBy("doc_id").agg(
+        *[
+            F.expr(
+                f"sum(CASE WHEN (h >> {b}) & 1 = 1 THEN 1 ELSE -1 END)"
+            ).alias(f"b{b}")
+            for b in range(_SIMHASH_BITS)
+        ]
+    )
+    fp = F.expr(
+        " + ".join(
+            f"(CASE WHEN b{b} > 0 THEN CAST(1 AS BIGINT) << {b}"
+            f" ELSE CAST(0 AS BIGINT) END)"
+            for b in range(_SIMHASH_BITS)
+        )
+    )
+    return sums.select("doc_id", fp.alias("simhash"))
+
+
+def _band_pairs(sig: DataFrame, n_bands: int, band) -> DataFrame:
+    """Candidate pairs of ``sig`` (one row per doc_id) that share a band,
+    each emitted once, at its LOWEST shared band.
+
+    ``band(p, j)`` is the SQL of band ``j`` over the signature columns
+    under prefix ``p`` (``""``, ``"a."`` or ``"b."``), so the band array
+    and the filter each reach the JVM as one expression string instead
+    of a py4j call per operator. The bands are
+    posexploded to (blk_i, blk) and self-joined on (blk_i, blk,
+    a.doc_id < b.doc_id); a pair sharing k bands joins k times. Both
+    signatures are in the joined row, so "this row's band is the pair's
+    lowest shared band" is per-row arithmetic: keep the row iff every
+    band below blk_i differs. That is the set a trailing DISTINCT would
+    give, without its shuffle of every qualifying pair (at sf0.1 the
+    DISTINCT was ~1.2 s of a 3.2 s simhash pipeline). The filter is an
+    unrolled conjunction over the signature columns as they are: a
+    higher-order ``exists(sequence(…))`` filter measured 3× slower, and
+    carrying the bands as an array column slower too. Returns the joined
+    rows under aliases ``a`` and ``b``.
+    """
+    bands = ", ".join(band("", j) for j in range(n_bands))
+    keys = sig.select(
+        "*", F.expr(f"posexplode(array({bands}))").alias("blk_i", "blk")
+    )
+    a, b = keys.alias("a"), keys.alias("b")
+    lowest = " AND ".join(
+        f"(a.blk_i <= {j} OR {band('a.', j)} != {band('b.', j)})"
+        for j in range(n_bands - 1)
+    )
+    return a.join(
+        b,
+        (F.col("a.blk_i") == F.col("b.blk_i"))
+        & (F.col("a.blk") == F.col("b.blk"))
+        & (F.col("a.doc_id") < F.col("b.doc_id")),
+    ).filter(F.expr(lowest))
+
+
+def _jaccard_verify(pairs: DataFrame, ds: DataFrame, t: float) -> DataFrame:
+    """(doc_a, doc_b, jaccard) of the candidate ``pairs`` whose exact
+    shingle-set Jaccard is ≥ ``t``. Verified on the doc grain: two
+    equi-joins against `_docsets` arrays (bounded by doc length), no
+    second pass over an inverted index. ``pairs`` must be distinct."""
+    jp = (
+        pairs.join(ds.alias("dx"), F.col("doc_a") == F.col("dx.doc_id"))
+        .join(ds.alias("dy"), F.col("doc_b") == F.col("dy.doc_id"))
+        .select(
+            "doc_a",
+            "doc_b",
+            F.size(F.array_intersect("dx.shs", "dy.shs")).alias("inter"),
+            F.size("dx.shs").alias("na"),
+            F.size("dy.shs").alias("nb"),
+        )
+        .withColumn(
+            "jaccard",
+            F.col("inter") * 1.0 / (F.col("na") + F.col("nb") - F.col("inter")),
+        )
+    )
+    return jp.filter(F.col("jaccard") >= t).select("doc_a", "doc_b", "jaccard")
+
+
 # Observability ledger for llm_dedup_near's AUTO form selection (mirrors
 # _IVF_FIT_EVENTS): one entry per auto-probed call with the sampled df
 # estimate and the form chosen, so tests/harnesses can pin the decision
@@ -195,10 +384,7 @@ _DEDUP_NEAR_PROBE_CACHE: dict[tuple[str, int], int] = {}
 @query(
     "llm_dedup_near",
     oracle=f"""
-    WITH sh0 AS (
-      SELECT doc_id, unnest(list_distinct({_SHINGLES_DUCK})) AS s
-      FROM documents
-    ),
+    WITH sh0 AS ({_SH_DUCK}),
     hot AS (SELECT s FROM sh0 GROUP BY s HAVING COUNT(*) > {_DF_CAP}),
     sh AS (SELECT * FROM sh0 WHERE s NOT IN (SELECT s FROM hot)),
     sz AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
@@ -281,8 +467,8 @@ def llm_dedup_near(
     shingles (highest df) sort last and stay out of most prefixes,
     bounding the posting blowup WITHOUT the df-cap's recall loss —
     candidates are then exact-verified against the full shingle arrays
-    on the doc grain. Lossless by the theorem (CI-asserted equal to
-    ``df_cap=None`` output); sub-quadratic except where the OUTPUT
+    on the doc grain (`_jaccard_verify`). Lossless by the theorem
+    (CI-asserted equal to ``df_cap=None`` output); sub-quadratic except where the OUTPUT
     itself is quadratic (an m-clique of true dups owns m² pairs — emit
     clusters via `llm_dedup_cluster` instead at that density).
 
@@ -290,7 +476,8 @@ def llm_dedup_near(
     so composing evals tokenize once across pipelines.
 
     This is the oracle-checkable core; `llm_dedup_minhash` is the
-    sub-quadratic scale path.
+    sub-quadratic scale path (minhash band pruning, then the same exact
+    verify as ``prefix_filter=True``).
     """
     d = _docs_tokenized(spark, sf_dir, docs)
     sh_all = d.select(
@@ -339,34 +526,7 @@ def llm_dedup_near(
             )
             .distinct()
         )
-        # Exact verification on the doc grain: two equi-joins against the
-        # per-doc shingle ARRAY (bounded by doc length) — no second pass
-        # over the inverted index.
-        docsets = d.select(
-            "doc_id", F.array_distinct(F.expr(_SHINGLES)).alias("shs")
-        )
-        jp = (
-            cand_pairs.join(
-                docsets.alias("dx"), F.col("doc_a") == F.col("dx.doc_id")
-            )
-            .join(docsets.alias("dy"), F.col("doc_b") == F.col("dy.doc_id"))
-            .select(
-                "doc_a",
-                "doc_b",
-                F.size(F.array_intersect("dx.shs", "dy.shs")).alias("inter"),
-                F.size("dx.shs").alias("na"),
-                F.size("dy.shs").alias("nb"),
-            )
-            .withColumn(
-                "jaccard",
-                F.col("inter")
-                * 1.0
-                / (F.col("na") + F.col("nb") - F.col("inter")),
-            )
-        )
-        return jp.filter(F.col("jaccard") >= t).select(
-            "doc_a", "doc_b", "jaccard"
-        )
+        return _jaccard_verify(cand_pairs, _docsets(d), t)
     if df_cap is not None and skew_safe is None:
         # AUTO form selection: bounded sampled max-df probe (cached per
         # corpus directory). The doc filter pushes below the explode
@@ -456,55 +616,24 @@ def llm_dedup_near(
     return j.filter(F.col("jaccard") >= 0.5).select("doc_a", "doc_b", "jaccard")
 
 
-@query("llm_dedup_minhash")  # rows-only: MinHash is approximate by design
+@query("llm_dedup_minhash")  # rows-only: no DuckDB twin of the banded verify
 def llm_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash+LSH near-dup candidates — the sub-quadratic 100 TB path.
+    """MinHash+LSH near-dup pairs — the sub-quadratic 100 TB path.
 
-    shingle → HashingTF sparse vector → MinHashLSH banding →
-    approxSimilarityJoin. Candidates are then exact-verified (same Jaccard
-    filter as `llm_dedup_near` would apply).
+    The `llm_minhash_lsh` signature and bands prune the candidates (each
+    pair emitted once, at its lowest shared band); the survivors are
+    exact-verified at Jaccard ≥ 0.5, the `llm_dedup_near` threshold, so
+    ``est_jaccard`` is the exact shingle-set Jaccard of a banded pair.
+    A true pair is lost only if it shares no band. The signature and the
+    verify read one tokenized frame. Building the query runs no job.
     """
-    from pyspark.ml.feature import HashingTF, MinHashLSH
-
-    d = (
-        load_table(spark, sf_dir, "documents")
-        .withColumn("tokens", F.expr(_TOKENS))
-        .withColumn("shingles", F.array_distinct(F.expr(_SHINGLES)))
-        .filter(F.size("shingles") > 0)
+    d = _docs_tokenized(spark, sf_dir, None)
+    pairs = _band_pairs(_minhash_sig(d), 8, _minhash_band).select(
+        F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
     )
-    tf = HashingTF(
-        inputCol="shingles", outputCol="features", numFeatures=1 << 18
+    return _jaccard_verify(pairs, _docsets(d), 0.5).withColumnRenamed(
+        "jaccard", "est_jaccard"
     )
-    # Eager localCheckpoint: feat is read three times (fit + both
-    # approxSimilarityJoin sides); without the pin each reader re-shingles
-    # the whole corpus. localCheckpoint (not persist) so the 2^18-dim
-    # sparse-vector blocks are GC-released when the frame goes out of
-    # scope — determinism tests and driver rounds invoke this repeatedly
-    # in one session, and a plain persist accumulated a cached copy per
-    # call (r6 ADVICE).
-    feat = (
-        tf.transform(d)
-        .select("doc_id", "features")
-        .localCheckpoint(eager=True)
-    )
-    mh = MinHashLSH(
-        inputCol="features", outputCol="hashes", numHashTables=8, seed=42
-    )
-    model = mh.fit(feat)
-    pairs = model.approxSimilarityJoin(
-        feat, feat, threshold=0.5, distCol="jaccard_dist"
-    )
-    return (
-        pairs.filter(F.col("datasetA.doc_id") < F.col("datasetB.doc_id"))
-        .select(
-            F.col("datasetA.doc_id").alias("doc_a"),
-            F.col("datasetB.doc_id").alias("doc_b"),
-            (1 - F.col("jaccard_dist")).alias("est_jaccard"),
-        )
-    )
-
-
-_SIMHASH_BITS = 60  # 15 md5 hex chars — exact in BIGINT in both engines
 
 
 def _simhash_blocks_duck() -> str:
@@ -602,85 +731,19 @@ def llm_dedup_simhash(
     `llm_simhash_eval` is the driver-visible calibration readout).
 
     Scale shape: per-bit signed sums are one map-combinable groupBy on
-    doc_id (60 partial-agg columns); banding is an equi-join on
-    (block_index, block_value); verification is a per-row popcount on
-    the xor — no full-fingerprint self-join anywhere.
+    doc_id (`_simhash_sig`, 60 partial-agg columns); banding is the
+    `_band_pairs` equi-join on (block_index, block_value), each pair
+    emitted once at its lowest shared block; verification is a per-row
+    popcount on the xor — no full-fingerprint self-join anywhere.
     """
-    bits = _SIMHASH_BITS
-    d = _docs_tokenized(spark, sf_dir, docs)
-    tok = d.select(
-        "doc_id", F.explode(F.array_distinct(F.col("tokens"))).alias("w")
-    ).withColumn(
-        "h", F.conv(F.substring(F.md5("w"), 1, 15), 16, 10).cast("long")
-    )
-    # One F.expr per bit-sum and ONE for the fingerprint reassembly —
-    # the per-bit pyspark.sql.functions chains cost ~900 py4j round
-    # trips (~1.3 s of driver-side plan construction per invocation).
-    # Set bits have disjoint powers, so + equals the bitwise OR (and
-    # matches the oracle's SUM form).
-    aggs = [
-        F.expr(
-            f"sum(CASE WHEN (h >> {b}) & 1 = 1 THEN 1 ELSE -1 END)"
-        ).alias(f"b{b}")
-        for b in range(bits)
-    ]
-    sums = tok.groupBy("doc_id").agg(*aggs)
-    fp = F.expr(
-        " + ".join(
-            f"(CASE WHEN b{b} > 0 THEN CAST(1 AS BIGINT) << {b}"
-            f" ELSE CAST(0 AS BIGINT) END)"
-            for b in range(bits)
-        )
-    )
-    sigs = sums.select("doc_id", fp.alias("simhash"))
-    blocks = sigs.select(
-        "doc_id",
-        "simhash",
-        F.posexplode(
-            F.array(
-                *[
-                    F.shiftrightunsigned("simhash", 15 * i).bitwiseAND(
-                        F.lit(0x7FFF).cast("long")
-                    )
-                    for i in range(4)
-                ]
-            )
-        ).alias("blk_i", "blk"),
-    )
-    a = blocks.alias("a")
-    b_ = blocks.alias("b")
+    sig = _simhash_sig(_docs_tokenized(spark, sf_dir, docs))
     ham = F.bit_count(
         F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))
     ).cast("int")
-    # Cross-band dedup WITHOUT an exchange (r14): a pair sharing k of the
-    # 4 bands used to surface k times from the band join and be deduped
-    # by a trailing DISTINCT — a full shuffle+sort of every qualifying
-    # pair (measured: the DISTINCT added ~1.2 s of the 3.2 s candidate
-    # pipeline at sf0.1, shuffling 2.06M pair rows down to 1.41M). Both
-    # fingerprints are already IN the joined row, so "this row's band is
-    # the pair's LOWEST shared band" is pure bit arithmetic: keep the row
-    # iff every band below blk_i differs between the two simhashes. Every
-    # qualifying pair has exactly one lowest shared band, so each pair
-    # surfaces exactly once — the identical set the DISTINCT produced,
-    # with zero extra shuffle (oracle hash unchanged; equality with the
-    # DISTINCT form pinned in tests/test_r14_optimizations.py).
-    def _band(side: str, j: int):
-        return F.shiftrightunsigned(
-            F.col(f"{side}.simhash"), 15 * j
-        ).bitwiseAND(F.lit(0x7FFF).cast("long"))
-
-    min_band = None
-    for j in range(3):
-        term = (F.col("a.blk_i") <= j) | (_band("a", j) != _band("b", j))
-        min_band = term if min_band is None else (min_band & term)
     return (
-        a.join(
-            b_,
-            (F.col("a.blk_i") == F.col("b.blk_i"))
-            & (F.col("a.blk") == F.col("b.blk"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        _band_pairs(
+            sig, 4, lambda p, j: _simhash_block(f"{p}simhash", j)
         )
-        .filter(min_band)
         .select(
             F.col("a.doc_id").alias("doc_a"),
             F.col("b.doc_id").alias("doc_b"),
@@ -2652,43 +2715,6 @@ def llm_embed_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- engine-portable MinHash LSH -------------------------------------------
 
-# Fixed universal-hash family h_i(t) = (a_i * t + b_i) mod 65537 over 16-bit
-# token ids. Constants are literals so the Spark and DuckDB pipelines are
-# the same function; 16 signatures → 8 bands × 2 rows targets Jaccard ≈ 0.5
-# ((1/8)^(1/2) ≈ 0.35 threshold, steep curve at 0.5+).
-_MH = [
-    (12289, 40961), (24593, 49157), (786433, 196613), (3079, 6151),
-    (1543, 389), (98317, 769), (393241, 1572869), (53, 97),
-    (193, 1259), (6291469, 12582917), (25165843, 139), (389, 521),
-    (1031, 2053), (4099, 8209), (16411, 32771), (65537, 131101),
-]
-_MH_P = 65537
-
-
-def _tok16_sql(md5_expr: str) -> str:
-    """16-bit token id from the first 4 md5 hex digits (portable SQL)."""
-    digit = (
-        "CASE WHEN ascii(substr({m}, {i}, 1)) <= 57 "
-        "THEN ascii(substr({m}, {i}, 1)) - 48 "
-        "ELSE ascii(substr({m}, {i}, 1)) - 87 END"
-    )
-    parts = [
-        f"({digit.format(m=md5_expr, i=i)}) * {16 ** (4 - i)}"
-        for i in range(1, 5)
-    ]
-    return "(" + " + ".join(parts) + ")"
-
-
-def _tok16_col(md5_col: Column) -> Column:
-    out = None
-    for i in range(1, 5):
-        c = F.ascii(F.substring(md5_col, i, 1))
-        d = F.when(c <= 57, c - 48).otherwise(c - 87)
-        term = d * (16 ** (4 - i))
-        out = term if out is None else out + term
-    return out
-
-
 def _minhash_lsh_oracle() -> str:
     sigs = ", ".join(
         f"MIN((CAST({a} AS BIGINT) * t + {b}) % {_MH_P}) AS s{i}"
@@ -2700,10 +2726,7 @@ def _minhash_lsh_oracle() -> str:
         for j in range(8)
     )
     return f"""
-    WITH sh AS (
-      SELECT doc_id, unnest(list_distinct({_SHINGLES_DUCK})) AS s
-      FROM documents
-    ),
+    WITH sh AS ({_SH_DUCK}),
     ti AS (SELECT doc_id, CAST({_tok16_sql('md5(s)')} AS BIGINT) AS t FROM sh),
     sig AS (SELECT doc_id, {sigs} FROM ti GROUP BY doc_id),
     bands AS ({bands})
@@ -2718,70 +2741,37 @@ def _minhash_lsh_oracle() -> str:
 def llm_minhash_lsh(
     spark: SparkSession, sf_dir: str, *, docs: DataFrame | None = None
 ) -> DataFrame:
-    """MinHash LSH with explicit portable hashing — the sub-quadratic
-    dedup path, exact-cross-checked (unlike `llm_dedup_minhash`, whose
-    pyspark.ml sketch is engine-internal).
+    """MinHash LSH candidate pairs with explicit portable hashing.
 
-    Pipeline: distinct shingles → 16-bit md5-derived token ids → 16 modular
-    min-hashes (one grouped aggregation) → 8 bands × 2 rows → self-join on
-    band key. Candidates share ≥1 band; at 100 TB the band join touches
-    only (doc_id, band_key) pairs — 16 bytes/doc/band — never text, and
-    banding keeps candidate counts near-linear for realistic similarity
-    distributions.
+    Every pair that shares ≥ 1 of the 8 bands, with ``n_bands`` the
+    number it shares. Pipeline: `_minhash_sig` (distinct shingles →
+    16-bit md5-derived token ids → 16 modular min-hashes, one grouped
+    aggregation) → 8 bands × 2 rows → `_band_pairs`, which emits each
+    pair once at its lowest shared band. Both signatures are in that row, so ``n_bands``
+    is per-row arithmetic, not a pair-grain aggregation. At 100 TB the
+    band join touches only (doc_id, band_key) pairs and the signatures —
+    never text — and banding keeps candidate counts near-linear for
+    realistic similarity distributions. `llm_dedup_minhash` adds the
+    exact verify on top.
     """
-    d = _docs_tokenized(spark, sf_dir, docs)
-    sh = d.select(
-        "doc_id", F.explode(F.array_distinct(F.expr(_SHINGLES))).alias("s")
-    )
-    ti = sh.select(
-        "doc_id", _tok16_col(F.md5("s")).cast("bigint").alias("t")
-    )
-    sig = ti.groupBy("doc_id").agg(
-        *[
-            F.min((F.lit(a).cast("bigint") * F.col("t") + b) % _MH_P).alias(
-                f"s{i}"
-            )
-            for i, (a, b) in enumerate(_MH)
-        ]
-    )
-    bands = sig.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(j).alias("band"),
-                        (F.col(f"s{2 * j}") * _MH_P + F.col(f"s{2 * j + 1}")).alias(
-                            "bk"
-                        ),
-                    )
-                    for j in range(8)
-                ]
-            )
-        ).alias("e"),
-    ).select("doc_id", "e.band", "e.bk")
-    a, b = bands.alias("a"), bands.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bk") == F.col("b.bk"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
+    sig = _minhash_sig(_docs_tokenized(spark, sf_dir, docs))
+    shared = F.expr(
+        " + ".join(
+            f"CAST({_minhash_band('a.', j)} = {_minhash_band('b.', j)} AS BIGINT)"
+            for j in range(8)
         )
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .agg(F.count(F.lit(1)).alias("n_bands"))
+    )
+    return _band_pairs(sig, 8, _minhash_band).select(
+        F.col("a.doc_id").alias("doc_a"),
+        F.col("b.doc_id").alias("doc_b"),
+        shared.alias("n_bands"),
     )
 
 
 # --- dedup clustering (iterative) ------------------------------------------
 
 _NEAR_PAIRS_DUCK = f"""
-    WITH sh AS (
-      SELECT doc_id, unnest(list_distinct({_SHINGLES_DUCK})) AS s
-      FROM documents
-    ),
+    WITH sh AS ({_SH_DUCK}),
     sz AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
     cand AS (
       SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS inter
@@ -4555,8 +4545,7 @@ def llm_repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "llm_near_dup_eval",
     oracle=f"""
-    WITH truth AS ({_NEAR_PAIRS_DUCK.replace("SELECT doc_a, doc_b",
-                                             "SELECT doc_a, doc_b", 1)}),
+    WITH truth AS ({_NEAR_PAIRS_DUCK}),
     cand AS ({_minhash_lsh_oracle()}),
     tp AS (
       SELECT COUNT(*) AS n FROM cand c

@@ -9,7 +9,8 @@ canonical results — the cheap local stand-in for "same answer on every
 retry of every task".
 
 Key selection = the machinery that can go nondeterministic:
-- seeded randomness: sampling, KMeans quantizer, MinHashLSH banding
+- seeded randomness: sampling, KMeans quantizer; and minhash banding,
+  whose hashes are fixed but whose pairs come out of a band self-join
 - order-sensitive aggregation: collect_list → sort_array keys, listagg
 - physical-plan artifacts: spark_partition_id prefix sums, persist reuse
 - streaming drains: fresh memory-sink per call (a stale sink name or

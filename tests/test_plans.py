@@ -771,13 +771,15 @@ def test_cbo_statistics_feed_the_optimizer(spark, sf_dir):
         "mm_resize",
         "mm_decode_meta",
         "agg_countmin",
+        "llm_dedup_minhash",
     ],
 )
 def test_construction_runs_no_job(spark, sf_dir, key):
     """Building these keys is metadata-only: the corpus size is a lazy
     broadcast aggregate (llm_tfidf_topterms), scan parallelism comes from
-    catalog.scan_splits instead of an rdd probe, and table schemas come
-    from the catalog memo. The first call warms that memo."""
+    catalog.scan_splits instead of an rdd probe, table schemas come from
+    the catalog memo, and minhash signatures are a SQL aggregation with
+    no model fit (llm_dedup_minhash). The first call warms that memo."""
     from tests.conftest import spark_jobs
 
     QUERIES[key](spark, sf_dir)

@@ -102,105 +102,6 @@ def test_gif_decode_rejects_out_of_table_indices():
         decode_gif_frames(bytes(payload))
 
 
-def test_simhash_min_band_emission_equals_distinct(spark, sf_dir):
-    """r14: llm_dedup_simhash dedups cross-band pair duplicates by
-    emitting each pair only from its LOWEST shared band (bit arithmetic
-    in the join) instead of a trailing DISTINCT (a full shuffle of every
-    qualifying pair). The emitted set must equal the DISTINCT of the raw
-    band join — re-derived here from the raw join without the min-band
-    filter."""
-    from pyspark.sql import functions as F
-
-    from luxor_db_spark.registry import load_all_queries
-
-    q = load_all_queries()
-    new = q["llm_dedup_simhash"](spark, sf_dir)
-    got = sorted(map(tuple, new.collect()))
-    assert got == sorted(set(got)), "min-band emission produced duplicates"
-
-    # raw band join re-derivation (the r13 DISTINCT form's input)
-    from luxor_db_spark.catalog import load_table
-    from luxor_db_spark.operators.llm import _SIMHASH_BITS, _TOKENS
-
-    d = load_table(spark, sf_dir, "documents").select(
-        "doc_id", F.expr(_TOKENS).alias("tokens")
-    )
-    tok = d.select(
-        "doc_id", F.explode(F.array_distinct(F.col("tokens"))).alias("w")
-    ).withColumn(
-        "h", F.conv(F.substring(F.md5("w"), 1, 15), 16, 10).cast("long")
-    )
-    aggs = [
-        F.expr(
-            f"sum(CASE WHEN (h >> {b}) & 1 = 1 THEN 1 ELSE -1 END)"
-        ).alias(f"b{b}")
-        for b in range(_SIMHASH_BITS)
-    ]
-    sums = tok.groupBy("doc_id").agg(*aggs)
-    fp = F.expr(
-        " + ".join(
-            f"(CASE WHEN b{b} > 0 THEN CAST(1 AS BIGINT) << {b}"
-            f" ELSE CAST(0 AS BIGINT) END)"
-            for b in range(_SIMHASH_BITS)
-        )
-    )
-    sigs = sums.select("doc_id", fp.alias("simhash"))
-    blocks = sigs.select(
-        "doc_id",
-        "simhash",
-        F.posexplode(
-            F.array(
-                *[
-                    F.shiftrightunsigned("simhash", 15 * i).bitwiseAND(
-                        F.lit(0x7FFF).cast("long")
-                    )
-                    for i in range(4)
-                ]
-            )
-        ).alias("blk_i", "blk"),
-    )
-    a, b_ = blocks.alias("a"), blocks.alias("b")
-    old = (
-        a.join(
-            b_,
-            (F.col("a.blk_i") == F.col("b.blk_i"))
-            & (F.col("a.blk") == F.col("b.blk"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
-            .cast("int")
-            .alias("hamming"),
-        )
-        .filter(F.col("hamming") <= 7)
-        .distinct()
-    )
-    assert got == sorted(map(tuple, old.collect()))
-
-
-def test_simhash_eval_broadcast_metric_join_counts(spark, sf_dir):
-    """r14: the eval's metric join went full-outer → broadcast-left on
-    the checkpointed truth side. The three counts must equal the
-    independently-computed set sizes."""
-    from luxor_db_spark.registry import load_all_queries
-
-    q = load_all_queries()
-    row = q["llm_simhash_eval"](spark, sf_dir).collect()[0]
-    cand = {
-        (r.doc_a, r.doc_b)
-        for r in q["llm_dedup_simhash"](spark, sf_dir).collect()
-    }
-    truth = {
-        (r.doc_a, r.doc_b)
-        for r in q["llm_dedup_near"](spark, sf_dir).collect()
-    }
-    assert row.n_candidates == len(cand)
-    assert row.n_truth == len(truth)
-    assert row.n_true_positive == len(cand & truth)
-
-
 def test_gif_decode_fixture_payload_unchanged():
     """End-to-end pin over the real synthesized container: decode of a
     make_gif_animated payload still yields the closed-form checksums."""

@@ -53,6 +53,17 @@ def test_lsh_surfaces_every_true_pair_at_fixture_scale(spark, sf_dir):
     assert m["recall"] == 1.0
 
 
+def test_minhash_multipliers_nonzero_mod_p():
+    """Every minhash multiplier is nonzero mod the prime: a multiple of
+    p makes (a*t + b) mod p the constant b mod p for every token, so its
+    signature row is the same for every document and its band keys on
+    one hash instead of two."""
+    from luxor_db_spark.operators.llm import _MH, _MH_P
+
+    assert len(_MH) == 16
+    assert all(a % _MH_P != 0 for a, _ in _MH)
+
+
 def test_pair_metrics_arithmetic(spark):
     """Precision/recall on a hand-checked toy: cand = {AB, AC, AD},
     truth = {AB, AC, BC} → tp=2, precision 2/3, recall 2/3."""
@@ -198,9 +209,11 @@ def test_ivf_sample_then_fit_branch(spark, sf_dir, monkeypatch):
 
 
 def test_minhash_ml_path_recall_and_precision_at_fixture(spark, sf_dir):
-    """llm_dedup_minhash (the Spark ML MinHashLSH path) recovers the
-    complete uncapped truth set with zero false pairs at the fixture —
-    measured 1.0/1.0; deterministic (seed=42 over static data)."""
+    """llm_dedup_minhash (portable minhash bands, then the exact Jaccard
+    verify) recovers the complete uncapped truth set with zero false
+    pairs at the fixture: the banding drops no true pair and the verify
+    admits no false one. Deterministic: fixed md5-derived hashes over
+    static data."""
     from luxor_db_spark.operators.llm import llm_dedup_minhash
 
     truth = _pairs(llm_dedup_near(spark, sf_dir, skew_safe=True, df_cap=None))
@@ -285,6 +298,78 @@ def test_simhash_banding_beats_old_equality_form(spark, sf_dir):
         for r in llm_dedup_simhash(spark, sf_dir, hamming_max=3).collect()
     }
     assert tight <= cand
+
+
+def test_simhash_min_band_emission_equals_distinct(spark, sf_dir):
+    """llm_dedup_simhash emits each pair once, from its LOWEST shared
+    band (`_band_pairs`' per-row filter), instead of deduping the band
+    join with a trailing DISTINCT (a full shuffle of every qualifying
+    pair). The emitted set must equal the DISTINCT of the raw band join,
+    re-derived here from the engine's fingerprint and blocks without the
+    lowest-band filter."""
+    from pyspark.sql import functions as F
+
+    from luxor_db_spark.catalog import load_table
+    from luxor_db_spark.operators.llm import (
+        _TOKENS,
+        _simhash_block,
+        _simhash_sig,
+        llm_dedup_simhash,
+    )
+
+    got = sorted(map(tuple, llm_dedup_simhash(spark, sf_dir).collect()))
+    assert got == sorted(set(got)), "min-band emission produced duplicates"
+
+    d = load_table(spark, sf_dir, "documents").select(
+        "doc_id", F.expr(_TOKENS).alias("tokens")
+    )
+    blocks = _simhash_sig(d).select(
+        "doc_id",
+        "simhash",
+        F.posexplode(
+            F.array(*[F.expr(_simhash_block("simhash", i)) for i in range(4)])
+        ).alias("blk_i", "blk"),
+    )
+    a, b_ = blocks.alias("a"), blocks.alias("b")
+    old = (
+        a.join(
+            b_,
+            (F.col("a.blk_i") == F.col("b.blk_i"))
+            & (F.col("a.blk") == F.col("b.blk"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        )
+        .select(
+            F.col("a.doc_id").alias("doc_a"),
+            F.col("b.doc_id").alias("doc_b"),
+            F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
+            .cast("int")
+            .alias("hamming"),
+        )
+        .filter(F.col("hamming") <= 7)
+        .distinct()
+    )
+    assert got == sorted(map(tuple, old.collect()))
+
+
+def test_simhash_eval_broadcast_metric_join_counts(spark, sf_dir):
+    """llm_simhash_eval counts through a broadcast-left join on the
+    checkpointed truth side; its three counts must equal the
+    independently-computed set sizes."""
+    from luxor_db_spark.registry import load_all_queries
+
+    q = load_all_queries()
+    row = q["llm_simhash_eval"](spark, sf_dir).collect()[0]
+    cand = {
+        (r.doc_a, r.doc_b)
+        for r in q["llm_dedup_simhash"](spark, sf_dir).collect()
+    }
+    truth = {
+        (r.doc_a, r.doc_b)
+        for r in q["llm_dedup_near"](spark, sf_dir).collect()
+    }
+    assert row.n_candidates == len(cand)
+    assert row.n_truth == len(truth)
+    assert row.n_true_positive == len(cand & truth)
 
 
 def test_ivf_tier_function_maps_corpus_size_to_sqrt_n_grid():
