@@ -336,8 +336,9 @@ def join_skew_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     AQE kept picking BroadcastHashJoin on the ×N-replicated build until it
     outgrew the threshold — serializing the whole join through one hashed
     relation (measured 2.07 s → 0.79 s at sf0.1 and 7.9 s → 1.1 s at ×8
-    amplification after the hint; tools/scale_curve.py caught the ×8→×16
-    time INVERSION the flip caused). Shuffle-hash, not sort-merge: the
+    amplification after the hint; the recorded scaling curve caught the
+    ×8→×16 time INVERSION the flip caused, docs/SCALE.md "Round 5 addendum:
+    the ×16 extension"). Shuffle-hash, not sort-merge: the
     (key, salt) partitioning is the whole point and neither side benefits
     from sorted output.
     """

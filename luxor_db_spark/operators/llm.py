@@ -137,8 +137,8 @@ def llm_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     so a degenerate dup group (10⁶–10⁸ empty/boilerplate copies at web
     scale) reduces to one partial row per input partition instead of
     buffering the whole posting in a single window task (r10 verdict #2;
-    the window form's hot-group buffer is measured in
-    ``tools/skew_stress.py``). Same keep-lowest output by construction.
+    docs/SCALE.md "Round 11: keep-first dedup leaves the window form").
+    Same keep-lowest output by construction.
     """
     d = load_table(spark, sf_dir, "documents")
     fp = F.md5(F.expr(_NORM))
@@ -440,8 +440,9 @@ def llm_dedup_near(
       the Zipf head outgrows the broadcast threshold (a forced broadcast
       would collect an unbounded hot set to the driver). Costs one extra
       scan+explode; at Zipf scale that is the cheap side of the trade.
-      `tools/skew_stress.py --case dedup_near_cap` measures both forms on
-      an amplified Zipf corpus (and asserts auto picks this one there).
+      Both forms were measured on an amplified Zipf corpus (docs/SCALE.md
+      "Round 9: dedup_near's df-cap forms measured on an amplified Zipf
+      corpus"; auto picks this one there).
     - ``skew_safe=False``: df as a COUNT window over ``partitionBy(s)`` —
       the exact partitioning the self-join needs, so the cap filter rides
       the join's own Exchange (one scan+explode, one Exchange(s), reused
@@ -768,7 +769,7 @@ def llm_dedup_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding near-dup removal: drop any vector cosine-similar (≥0.3) to a
     lower-id vector of the same label (greedy keep-first, blocked by label).
 
-    SCALE CAVEAT (measured, tools/scale_curve.py): label cardinality is
+    SCALE CAVEAT (measured, docs/scale_curves.json): label cardinality is
     CONSTANT, so label blocking does NOT bound the pair space as the corpus
     grows — within-label pairs are O(N²/|labels|), and the ×1/×4/×16
     amplified curve ran 6.5/29/137 s. This key is the exact oracle-checked
@@ -3426,8 +3427,8 @@ def llm_chunk_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id",
-        F.split(F.coalesce(F.col("text"), F.lit("")), " ").alias("tok"),
-        F.size(F.split(F.coalesce(F.col("text"), F.lit("")), " ")).alias("n"),
+        F.expr(_TOKENS).alias("tok"),
+        F.size(F.expr(_TOKENS)).alias("n"),
     )
     ch = d.select(
         "doc_id",
@@ -3535,10 +3536,8 @@ def llm_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id",
-        F.split(F.coalesce(F.col("text"), F.lit("")), " ").alias("tok"),
-        F.size(F.split(F.coalesce(F.col("text"), F.lit("")), " ")).alias(
-            "n"
-        ),
+        F.expr(_TOKENS).alias("tok"),
+        F.size(F.expr(_TOKENS)).alias("n"),
     )
     ch = _chunks(d)
     # Keep-first via min(struct(doc_id, chunk_id)) per fingerprint —
@@ -3752,7 +3751,7 @@ def llm_instruction_format(spark: SparkSession, sf_dir: str) -> DataFrame:
     adds O(1) bytes per row.
     """
     d = load_table(spark, sf_dir, "documents")
-    excerpt = F.concat_ws(" ", F.slice(F.split(F.coalesce(F.col("text"), F.lit("")), " "), 1, 40))
+    excerpt = F.concat_ws(" ", F.slice(F.expr(_TOKENS), 1, 40))
     prompt = F.concat(
         F.lit("### Instruction:\nSummarize the following "),
         F.col("lang"),
@@ -3914,7 +3913,7 @@ def llm_dpo_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     d = load_table(spark, sf_dir, "documents")
     score = (
-        F.size(F.array_distinct(F.split(F.coalesce(F.col("text"), F.lit("")), " "))) * 1000
+        F.size(F.array_distinct(F.expr(_TOKENS))) * 1000
         + F.col("n_chars")
     ).alias("score")
     s = d.select("doc_id", "lang", "source", score)
@@ -3990,7 +3989,7 @@ def llm_bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     model size; exact MLE here keeps the oracle precise.
     """
     d = load_table(spark, sf_dir, "documents").select(
-        "doc_id", F.split(F.coalesce(F.col("text"), F.lit("")), " ").alias("t")
+        "doc_id", F.expr(_TOKENS).alias("t")
     )
     bg = (
         d.filter(F.size("t") >= 2)
@@ -4230,7 +4229,7 @@ def llm_rrf_hybrid(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     kw = (
         d.select(
-            "doc_id", F.explode(F.split(F.coalesce(F.col("text"), F.lit("")), " ")).alias("term")
+            "doc_id", F.explode(F.expr(_TOKENS)).alias("term")
         )
         .filter(F.col("term").isin("join", "stream", "window"))
         .groupBy("doc_id")
@@ -4507,7 +4506,7 @@ def llm_repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     `llm_bigram_lm_score`, sharable in one pass in a fused pipeline.
     """
     d = load_table(spark, sf_dir, "documents").select(
-        "doc_id", F.split(F.coalesce(F.col("text"), F.lit("")), " ").alias("t")
+        "doc_id", F.expr(_TOKENS).alias("t")
     )
     bg = (
         d.filter(F.size("t") >= 2)
@@ -4776,7 +4775,7 @@ def llm_dataset_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).cast("bigint")
     s = d.select(
         _hexdigit(key, 1).alias("shard"),
-        F.size(F.split(F.coalesce(F.col("text"), F.lit("")), " ")).alias("n_tokens"),
+        F.size(F.expr(_TOKENS)).alias("n_tokens"),
         "n_chars",
         content_h.alias("content_h"),
     )

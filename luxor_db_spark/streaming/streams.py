@@ -89,12 +89,13 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = os.path.join(sf_dir, "events.parquet")
     raw_schema = parquet_schema(spark, path)
     if os.path.isdir(path):
-        # Spark-written layout (e.g. the tools/scale_curve.py amplified
-        # fixtures): events.parquet is a DIRECTORY of part files. Point the
-        # file source at it directly and leave maxFilesPerTrigger unset so
-        # ALL part files land in microbatch 0 — semantics identical to the
-        # single-file fixture (one data batch), regardless of how many part
-        # files the writer emitted. (Per-file batching would make
+        # Spark-written layout (e.g. the amplified fixtures that
+        # tools/scale_curve.build_amplified writes): events.parquet is a
+        # DIRECTORY of part files. Point the file source at it directly
+        # and leave maxFilesPerTrigger unset so ALL part files land in
+        # microbatch 0 — semantics identical to the single-file fixture
+        # (one data batch), regardless of how many part files the writer
+        # emitted. (Per-file batching would make
         # append-mode watermark drops depend on nondeterministic file
         # listing order, and update-mode sinks would see one emission per
         # batch instead of one per key.)
@@ -123,11 +124,12 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Per-key stats of the LAST completed drain (r11 verdict task 3): a
 # finite-replay streaming key's wall time is ≈ n_batches × per-batch
 # commit overhead + data work, so cross-run timing comparisons are only
-# meaningful at a PINNED micro-batch count — tools/strong_scale.py and
-# the drift probes read this after each run to normalize, and to verify
-# the pin held. state_rows_total is the summed numRowsTotal across
-# stateful operators at the last progress — the "state scales with
-# cores, not corpus" evidence for the streaming dedup family.
+# meaningful at a PINNED micro-batch count — bench.py publishes these
+# with each streaming key's time so a comparison can normalize by batch
+# count and verify the pin held. state_rows_total is the summed
+# numRowsTotal across stateful operators at the last progress — the
+# "state scales with cores, not corpus" evidence for the streaming dedup
+# family.
 LAST_DRAIN_STATS: dict[str, dict] = {}
 
 # Local-fixture state-partition right-sizing (r12 verdict task 3): a
@@ -151,11 +153,6 @@ LAST_DRAIN_STATS: dict[str, dict] = {}
 # real cluster deployment is never touched (state partitioning there is
 # a capacity decision, sized to corpus volume, and is locked into the
 # checkpoint on first batch).
-#
-# LUXOR_STREAM_SHUFFLE_PARTITIONS overrides: an integer pins that count
-# (tools/strong_scale.py pins it to the arm's core count so its
-# cross-core comparison keeps measuring core scaling); "0"/"" disables
-# the clamp entirely.
 _STREAM_PARTITIONS_DEFAULT = 8
 
 # Drains whose per-batch work runs in PYTHON workers
@@ -178,10 +175,6 @@ def _stream_shuffle_partitions(
 ) -> str | None:
     """Partition count to pin for a streaming drain, or None to leave
     the session conf alone."""
-    override = os.environ.get("LUXOR_STREAM_SHUFFLE_PARTITIONS")
-    if override is not None:
-        override = override.strip()
-        return None if override in ("", "0") else override
     if key in _PYTHON_STATE_KEYS:
         return None
     try:
@@ -1094,12 +1087,12 @@ def _stream_chunk_survivors(docs: DataFrame) -> DataFrame:
     surviving chunks — one stateful operator. Factored out (like
     `_stream_survivors`) so the invariance and state-cleanup tests drive
     the exact executed pipeline."""
-    from luxor_db_spark.operators.llm import _chunks
+    from luxor_db_spark.operators.llm import _TOKENS, _chunks
 
     d = docs.select(
         "doc_id",
         _id_ts("doc_id"),
-        F.split(F.coalesce(F.col("text"), F.lit("")), " ").alias("tok"),
+        F.expr(_TOKENS).alias("tok"),
     ).withColumn("n", F.size("tok"))
     a, b = _epoch_sides(_chunks(d, "ts").withWatermark("ts", "2 hours"))
     j = b.join(

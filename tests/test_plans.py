@@ -78,7 +78,8 @@ def test_skew_salted_join_stays_on_shuffle_path(audit):
     the probe side, so a broadcast here would mean the salt only ×N-inflated
     the build for nothing — and AQE demonstrably picked exactly that until
     the build outgrew the threshold (2.6× slower at sf0.1, 7× at ×8
-    amplification, and a ×8→×16 wall-time inversion in scale_curve.py).
+    amplification, and a ×8→×16 wall-time inversion in the recorded
+    scaling curve, docs/SCALE.md "Round 5 addendum: the ×16 extension").
     The hint pins the plan this key exists to demonstrate."""
     a = audit("join_skew_salted")
     assert a.n_shuffled_hash_joins >= 1, a.text[:2000]

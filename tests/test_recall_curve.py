@@ -564,8 +564,9 @@ def test_dedup_near_auto_selects_safe_form_on_zipf_head(spark, tmp_path):
     """The probe's other half: a corpus whose boilerplate shingle sits
     far past the cap must flip auto to the skew-safe form (the sampled
     estimate sees ~df/16 hits of a df=n_docs shingle), with the same
-    pair set as both explicit forms. Miniature of
-    tools/skew_stress.py --case dedup_near_cap."""
+    pair set as both explicit forms. Miniature of the amplified Zipf
+    corpus in docs/SCALE.md "Round 9: dedup_near's df-cap forms measured
+    on an amplified Zipf corpus"."""
     from pyspark.sql import functions as F
 
     import luxor_db_spark.operators.llm as llm_mod

@@ -1,4 +1,4 @@
-"""Amplifier correctness for tools/scale_curve.py.
+"""Amplifier correctness for tools/scale_curve.build_amplified.
 
 The scaling-curve numbers in docs/SCALE.md are only evidence if the
 amplified input is what it claims to be: exact ×f row growth, disjoint
@@ -20,7 +20,7 @@ sys.path.insert(
     0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 )
 
-from tools.scale_curve import _fit_slope, build_amplified  # noqa: E402
+from tools.scale_curve import build_amplified  # noqa: E402
 
 from luxor_db_spark.catalog import TABLES, load_table  # noqa: E402
 
@@ -127,13 +127,6 @@ def test_dims_are_byte_identical(spark, amp_dir):
         amp = load_table(spark, amp_dir, t)
         assert base.exceptAll(amp).count() == 0
         assert amp.exceptAll(base).count() == 0
-
-
-def test_fit_slope_recovers_known_exponents():
-    xs = [1.0, 2.0, 4.0, 8.0]
-    assert abs(_fit_slope(xs, [3 * x for x in xs]) - 1.0) < 1e-9
-    assert abs(_fit_slope(xs, [0.5 * x * x for x in xs]) - 2.0) < 1e-9
-    assert abs(_fit_slope(xs, [7.0] * 4) - 0.0) < 1e-9
 
 
 @pytest.fixture(scope="module")

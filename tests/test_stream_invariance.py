@@ -590,7 +590,7 @@ def test_stream_embed_inorder_multibatch_equals_single(
     assert single and ordered == single
 
 
-def test_stream_shuffle_partition_clamp_policy(spark, monkeypatch):
+def test_stream_shuffle_partition_clamp_policy(spark):
     """r13 (r12 verdict task 3): streaming drains clamp the state
     partition count on LOCAL sessions only — a stateful micro-batch
     schedules one task per shuffle partition per state store and AQE
@@ -598,15 +598,11 @@ def test_stream_shuffle_partition_clamp_policy(spark, monkeypatch):
     state-store commit cycles (measured 47.0 s → 19.5 s for the heavy
     dedup four at sf0.1/local[32]). Policy matrix:
 
-    - env unset, local, conf > 8  → clamp to the default (8)
-    - env unset, conf <= 8        → leave alone (None)
-    - env "0" / ""                → disabled (None)
-    - env "<n>"                   → pinned verbatim (strong_scale arms)
+    - local, conf > 8  → clamp to the default (8)
+    - conf <= 8        → leave alone (None)
     """
     from luxor_db_spark.streaming import streams
 
-    env = "LUXOR_STREAM_SHUFFLE_PARTITIONS"
-    monkeypatch.delenv(env, raising=False)
     prior = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         spark.conf.set("spark.sql.shuffle.partitions", "32")
@@ -615,19 +611,11 @@ def test_stream_shuffle_partition_clamp_policy(spark, monkeypatch):
         assert streams._stream_shuffle_partitions(spark) is None
         spark.conf.set("spark.sql.shuffle.partitions", "4")
         assert streams._stream_shuffle_partitions(spark) is None
-
-        spark.conf.set("spark.sql.shuffle.partitions", "32")
-        monkeypatch.setenv(env, "0")
-        assert streams._stream_shuffle_partitions(spark) is None
-        monkeypatch.setenv(env, "")
-        assert streams._stream_shuffle_partitions(spark) is None
-        monkeypatch.setenv(env, "16")
-        assert streams._stream_shuffle_partitions(spark) == "16"
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prior)
 
 
-def test_stream_checkpoint_manager_policy(spark, monkeypatch):
+def test_stream_checkpoint_manager_policy(spark):
     """Without native Hadoop IO, the default FileContext-based checkpoint
     manager forks ``readlink`` on every checkpoint-file rename, which
     dominated fixture-scale drains. Engine-started streaming queries pin
@@ -645,7 +633,6 @@ def test_stream_checkpoint_manager_policy(spark, monkeypatch):
     conf = streams._CHECKPOINT_MANAGER_CONF
     ckpt_loc = "spark.sql.streaming.checkpointLocation"
     fs_impl = "fs.hdfs.impl"
-    monkeypatch.delenv("LUXOR_STREAM_SHUFFLE_PARTITIONS", raising=False)
     hconf = spark.sparkContext._jsc.hadoopConfiguration()
     assert spark.conf.get(conf, None) is None
     assert spark.conf.get(ckpt_loc, None) is None
@@ -719,17 +706,19 @@ def test_drain_reports_failed_conf_restore(
     parts = "spark.sql.shuffle.partitions"
     prior_parts = spark.conf.get(parts)
     assert spark.conf.get(conf, None) is None
+    # Above the clamp, so the drain pins 8 and must restore 32.
+    session_parts = "32"
+    spark.conf.set(parts, session_parts)
     real_set = RuntimeConfig.set
 
     def _set(self, key, value):
-        if key == parts and value == prior_parts:
+        if key == parts and value == session_parts:
             raise RuntimeError("conf store down")
         return real_set(self, key, value)
 
     def _unset(self, key):
         raise RuntimeError("conf store down")
 
-    monkeypatch.setenv("LUXOR_STREAM_SHUFFLE_PARTITIONS", "2")
     monkeypatch.setattr(RuntimeConfig, "set", _set)
     monkeypatch.setattr(RuntimeConfig, "unset", _unset)
     try:
@@ -739,30 +728,32 @@ def test_drain_reports_failed_conf_restore(
         leaked = (spark.conf.get(parts), spark.conf.get(conf, None))
         spark.conf.set(parts, prior_parts)
         spark.conf.unset(conf)
-    assert leaked == ("2", streams._FS_CHECKPOINT_MANAGER)
+    assert leaked == ("8", streams._FS_CHECKPOINT_MANAGER)
     err = capsys.readouterr().err
     assert f"stream_tumbling: could not restore {parts}" in err
     assert f"stream_tumbling: could not restore {conf}" in err
 
 
-def test_stream_result_invariant_to_state_partition_count(
-    spark, sf_dir, monkeypatch
-):
-    """The clamp is a physical-layout knob, not semantics: the same key
-    drained at 2 vs 8 state partitions must emit identical rows, and
-    `_drain` must restore the session conf afterwards (a leaked clamp
-    would shrink every subsequent BATCH shuffle too)."""
-    env = "LUXOR_STREAM_SHUFFLE_PARTITIONS"
-    prior = spark.conf.get("spark.sql.shuffle.partitions")
-
-    monkeypatch.setenv(env, "2")
-    clamped = _run(spark, sf_dir, "stream_tumbling")
-    assert spark.conf.get("spark.sql.shuffle.partitions") == prior, (
-        "_drain leaked its pinned shuffle-partition conf into the session"
-    )
-    monkeypatch.setenv(env, "8")
-    wide = _run(spark, sf_dir, "stream_tumbling")
-    assert clamped == wide and clamped
+def test_stream_result_invariant_to_state_partition_count(spark, sf_dir):
+    """The state partition count is a physical-layout knob, not
+    semantics: the same key drained at 2 vs 8 state partitions (both at
+    or under the clamp, so the session's count is the one used) must
+    emit identical rows, and `_drain` must leave the session conf as it
+    found it (a leaked pin would resize every subsequent BATCH shuffle
+    too)."""
+    parts = "spark.sql.shuffle.partitions"
+    prior = spark.conf.get(parts)
+    try:
+        spark.conf.set(parts, "2")
+        narrow = _run(spark, sf_dir, "stream_tumbling")
+        assert spark.conf.get(parts) == "2", (
+            "_drain leaked a pinned shuffle-partition conf into the session"
+        )
+        spark.conf.set(parts, "8")
+        wide = _run(spark, sf_dir, "stream_tumbling")
+    finally:
+        spark.conf.set(parts, prior)
+    assert narrow == wide and narrow
 
 
 def test_drain_drops_prior_sink_view_of_same_key(spark, sf_dir):
@@ -790,10 +781,10 @@ def test_drain_drops_prior_sink_view_of_same_key(spark, sf_dir):
 
 def test_drain_records_batch_and_state_stats(spark, sf_dir):
     """r12: `_drain` must record LAST_DRAIN_STATS per key — micro-batch
-    count and retained state rows — because the strong-scale harness
-    normalizes streaming wall time by batch count and flags unpinned
-    arms; a silently-missing stats row would let an unpinned comparison
-    pass as a measurement. The single-file events fixture replays as
+    count and retained state rows — because bench.py publishes them with
+    each streaming key's time, so a comparison can normalize wall time by
+    batch count and flag unpinned arms; a silently-missing stats row
+    would let an unpinned comparison pass as a measurement. The single-file events fixture replays as
     exactly one data batch; the complete-mode agg holds every window in
     state at last progress."""
     from luxor_db_spark.streaming import streams
@@ -874,18 +865,15 @@ def test_drain_reports_failed_prior_sink_drop(
     assert "catalog down" in err
 
 
-def test_stream_clamp_exempts_python_state_drains(spark, monkeypatch):
+def test_stream_clamp_exempts_python_state_drains(spark):
     """r14 (r13 verdict item 2): the local state-partition clamp trims
     empty state-store commit cycles for JVM-stateful drains, but an
     applyInPandasWithState drain schedules one PYTHON worker task per
     partition — clamping cuts its real parallelism (stream_stateful
     measured 2.57 s at 8 vs 2.22 s at 32; the driver saw 1.77 s at 32 →
-    3.60 s clamped). Python-state drains are exempt; the env override
-    still pins everything."""
+    3.60 s clamped). Python-state drains are exempt."""
     from luxor_db_spark.streaming import streams
 
-    env = "LUXOR_STREAM_SHUFFLE_PARTITIONS"
-    monkeypatch.delenv(env, raising=False)
     prior = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         spark.conf.set("spark.sql.shuffle.partitions", "32")
@@ -902,11 +890,6 @@ def test_stream_clamp_exempts_python_state_drains(spark, monkeypatch):
                 spark, "stream_windowed_topk_bounded"
             )
             is None
-        )
-        monkeypatch.setenv(env, "16")
-        assert (
-            streams._stream_shuffle_partitions(spark, "stream_stateful")
-            == "16"
         )
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prior)

@@ -1,30 +1,16 @@
 #!/usr/bin/env python
-"""Bisect the r7->r9 five-key bench drift (r9 verdict ask #4).
+"""Same-host alternating A/B of chosen keys between a git ref and the
+live tree.
 
-Five sub-second headline keys drifted +22-47% between the quiet r7 and
-quiet r9 benches while the other 42 common keys' median moved -4.8%
-(r8 values sit with r7, so the step is r8->r9). Two hypotheses:
+``tools/timing_diff.py`` flags keys whose bench time moved by more than
+the calibrated noise; this probe tells a code change from machine drift
+for those keys. Each sample is a fresh tuned session in its own
+subprocess (median of ``LUXOR_BENCH_RUNS`` noop executions at
+``SPARK_GRAFT_SF_DIR``); the two arms alternate so slow machine-state
+drift cancels instead of loading one arm. Keys outside perfbench's
+workloads have no other same-host A/B.
 
-  A. session-state / suite-order effect: the keys run late in bench.py's
-     single shared session, and something in the r9 session (more
-     registered plans, listener state, codegen cache pressure) slows
-     late keys.
-  B. real regression: an r9 code change (the `_docs_tokenized` refactor
-     touched llm.py helpers these keys share) made the operators
-     themselves slower.
-
-This probe runs each key both ways at the bench's own SF:
-  ISO   — a FRESH tuned session per key (subprocess), warm-up, then
-          median of RUNS timed executions: no suite state at all.
-  SUITE — one bench-identical session that executes every headline key
-          preceding the target once (same order, same noop sink), then
-          times the target median-of-RUNS: full suite state.
-
-ISO ~= SUITE ~= r9 value  -> real regression (bisect commits next).
-ISO ~= r7 value < SUITE   -> suite/session-state effect (name it, done).
-
-Usage: python tools/drift_probe.py [--arm iso|suite] [key ...]
-(no --arm: runs SUITE inline, then ISO via one subprocess per key).
+Usage: python tools/drift_probe.py --ab <old-ref> <key> [key ...]
 """
 
 from __future__ import annotations
@@ -34,83 +20,11 @@ import os
 import statistics
 import subprocess
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 RUNS = int(os.environ.get("LUXOR_BENCH_RUNS", "5"))
-
-DRIFT_KEYS = [
-    "llm_bm25_search",
-    "llm_winnow_fingerprint",
-    "llm_chunk_overlap",
-    "win_moving_median",
-    "llm_dedup_fuzzy",
-]
-
-
-def _noop(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
-
-
-def _median_time(queries, key, spark) -> float:
-    samples = []
-    for _ in range(RUNS):
-        t0 = time.perf_counter()
-        _noop(queries[key](spark, SF_DIR))
-        samples.append(time.perf_counter() - t0)
-    return round(statistics.median(samples), 3)
-
-
-def run_iso(keys: list[str]) -> dict[str, float]:
-    """Each key in its own fresh tuned session (bench session recipe)."""
-    out = {}
-    for key in keys:
-        code = (
-            "import sys, json; sys.path.insert(0, %r)\n"
-            "from tools.drift_probe import _median_time\n"
-            "from luxor_db_spark.registry import load_all_queries\n"
-            "from luxor_db_spark.session import get_spark\n"
-            "q = load_all_queries()\n"
-            "spark = get_spark(app_name='drift-iso')\n"
-            "q['flagship_q1'](spark, %r).count()\n"  # bench-style warm-up
-            "print('RESULT ' + json.dumps(_median_time(q, %r, spark)))\n"
-        ) % (REPO, SF_DIR, key)
-        p = subprocess.run(
-            [sys.executable, "-c", code],
-            capture_output=True,
-            text=True,
-            cwd=REPO,
-        )
-        line = [l for l in p.stdout.splitlines() if l.startswith("RESULT ")]
-        out[key] = json.loads(line[0][7:]) if line else None
-        if not line:
-            print(p.stderr[-800:], file=sys.stderr)
-    return out
-
-
-def run_suite(keys: list[str]) -> dict[str, float]:
-    """bench.py's exact shape: one session, full headline order; targets
-    get median-of-RUNS, everything else one execution."""
-    from bench import HEADLINE
-    from luxor_db_spark.registry import load_all_queries
-    from luxor_db_spark.session import get_spark
-
-    queries = load_all_queries()
-    spark = get_spark(app_name="drift-suite")
-    queries["flagship_q1"](spark, SF_DIR).count()
-    out = {}
-    targets = set(keys)
-    for key in HEADLINE:
-        if key not in queries:
-            continue
-        if key in targets:
-            out[key] = _median_time(queries, key, spark)
-        else:
-            _noop(queries[key](spark, SF_DIR))
-    return out
 
 
 def _iso_time_in_tree(tree: str, key: str) -> float | None:
@@ -222,26 +136,13 @@ def run_ab(keys: list[str], old_ref: str, rounds: int = 4) -> int:
 
 
 def main(argv: list[str]) -> int:
-    arm = None
-    if "--arm" in argv:
-        i = argv.index("--arm")
-        arm = argv[i + 1]
-        argv = argv[:i] + argv[i + 2 :]
-    if "--ab" in argv:
-        i = argv.index("--ab")
-        old_ref = argv[i + 1]
-        argv = argv[:i] + argv[i + 2 :]
-        keys = [a for a in argv if not a.startswith("-")] or DRIFT_KEYS
-        return run_ab(keys, old_ref)
-    keys = [a for a in argv if not a.startswith("-")] or DRIFT_KEYS
-    results = {}
-    if arm in (None, "suite"):
-        results["suite"] = run_suite(keys)
-        print(json.dumps({"arm": "suite", **results["suite"]}), flush=True)
-    if arm in (None, "iso"):
-        results["iso"] = run_iso(keys)
-        print(json.dumps({"arm": "iso", **results["iso"]}), flush=True)
-    return 0
+    i = argv.index("--ab") if "--ab" in argv else len(argv)
+    old_ref = argv[i + 1] if i + 1 < len(argv) else "-"
+    keys = [a for a in argv[:i] + argv[i + 2 :] if not a.startswith("-")]
+    if old_ref.startswith("-") or not keys:
+        print(__doc__.strip().splitlines()[-1], file=sys.stderr)
+        return 2
+    return run_ab(keys, old_ref)
 
 
 if __name__ == "__main__":

@@ -90,7 +90,7 @@ _ALLOWED_REPEATS: dict[str, dict[str, tuple[int, str]]] = {
         "documents": (3, "tf and df each read the corpus once; the third read is the 1-row count(*) of the corpus size (no column data), broadcast into the plan so that building the query runs no job")
     },
     "llm_dedup_near": {
-        "documents": (3, "r9 skew-safe df-cap default: the hot-shingle count is a deliberate EXTRA map-side-combinable pass (partial (s,count) rows, immune to posting skew) ahead of the self-join's two sides — the alternative single-exchange window form buffers a Zipf-hot posting list in one task (SCALE.md r9, skew_stress --case dedup_near_cap)")
+        "documents": (3, "r9 skew-safe df-cap default: the hot-shingle count is a deliberate EXTRA map-side-combinable pass (partial (s,count) rows, immune to posting skew) ahead of the self-join's two sides — the alternative single-exchange window form buffers a Zipf-hot posting list in one task (measured in SCALE.md \"Round 9: dedup_near's df-cap forms measured on an amplified Zipf corpus\")")
     },
 }
 

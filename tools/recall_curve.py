@@ -1,12 +1,13 @@
 #!/usr/bin/env python
 """Recall/precision vs corpus scale for the approximate dedup paths.
 
-`tools/scale_curve.py` measured that the df-capped exact-Jaccard path
-(`llm_dedup_near`) and the banded MinHash path (`llm_minhash_lsh`) keep
-near-linear COST as the corpus grows — and noted the open caveat: the
-df-cap trades RECALL for that bound (shingle document frequency grows
-with the corpus, so ever more shingles cross `_DF_CAP` and drop out of
-the index). `llm_near_dup_eval` scores LSH against the *capped* truth at
+The measured scaling curves (`docs/scale_curves.json`, `docs/SCALE.md`
+"Round 5 addendum: measured scaling curves") show that the df-capped
+exact-Jaccard path (`llm_dedup_near`) and the banded MinHash path
+(`llm_minhash_lsh`) keep near-linear COST as the corpus grows — with an
+open caveat: the df-cap trades RECALL for that bound (shingle document
+frequency grows with the corpus, so ever more shingles cross `_DF_CAP`
+and drop out of the index). `llm_near_dup_eval` scores LSH against the *capped* truth at
 one scale only, so the caveat was argued, never measured.
 
 This harness measures it. For each amplification factor it computes the
@@ -25,9 +26,10 @@ and scores both production paths against it:
   (CI-asserted); what this harness measures is its COST relative to the
   uncapped truth — the price of losslessness at growing dup density.
 
-Reuses the scale_curve amplifier verbatim (rotation-amplified documents:
-dup density grows quadratically while input grows linearly — the
-adversarial case for recall, since every true pair must still be found).
+Reuses the `tools/scale_curve.build_amplified` amplifier verbatim
+(rotation-amplified documents: dup density grows quadratically while
+input grows linearly — the adversarial case for recall, since every true
+pair must still be found).
 
 Usage:
     python tools/recall_curve.py                 # factors 1,2,4,8

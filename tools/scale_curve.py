@@ -1,18 +1,16 @@
-#!/usr/bin/env python
-"""Empirical scaling curves: wall-time vs input size for the expensive keys.
+"""Fixture amplifier: the sf0.1 tables grown ×f with disjoint key spaces.
 
-SCALE.md argues each operator family survives a 100× scale-up by plan
-shape (bounded blocks, banded LSH, bucketed windows, broadcast-bounded
-probes). This harness MEASURES it: it amplifies the sf0.1 fixtures by
-×1/×2/×4/×8 with disjoint key spaces, runs each selected key at every
-factor on the same session, and fits the log-log slope of median wall
-time vs factor. Slope ≈ 1 is linear scaling; a slope ≥ SLOPE_FLAG on a
-key whose ×8 time is big enough to matter (T_MIN) is flagged as a
-potential super-linear blowup — the exact class a 1000-executor/100 TB
-deployment cannot absorb.
+``build_amplified(spark, f)`` writes an amplified copy of the fixture
+tables in the drop-in ``{dir}/{table}.parquet`` layout, so every
+registered ``queries()`` callable runs on it unchanged.
+``tools/recall_curve.py`` scores the dedup paths on it and
+``tests/test_scale_curve.py`` pins its contract. The wall-time curves
+once measured on it are recorded in ``docs/scale_curves.json`` and
+``docs/SCALE.md`` ("Round 5 addendum: measured scaling curves" and
+"Full-registry sweep"); the timing loop that produced them is retired
+(git history, commit 23c7a7e).
 
-Amplification (drop-in `{dir}/{table}.parquet` layout, so every
-registered `queries()` callable runs unchanged):
+Amplification:
 
 - dims (`region`, `nation`) are NOT replicated — facts grow, dims don't,
   matching how a real warehouse scales (and keeping broadcast sides
@@ -48,25 +46,15 @@ registered `queries()` callable runs unchanged):
 - `embeddings`: `vec_id` offset, vectors unchanged (ANN/kNN cost is
   value-independent; top-k outputs stay k-bounded).
 
-Usage:
-    python tools/scale_curve.py                   # default key set
-    python tools/scale_curve.py k1 k2 ...         # specific keys
-    python tools/scale_curve.py --factors 1,2,4   # fewer factors
-    python tools/scale_curve.py --rebuild         # force re-amplify
-
-Prints one JSON line per key and a final summary line. Amplified data
-lives under tmp/scale/x{f}/ (gitignored) and is reused across runs.
+Amplified data lives under tmp/scale/x{f}/ (gitignored) and is reused
+across calls.
 """
 
 from __future__ import annotations
 
-import json
-import math
 import os
 import shutil
-import statistics
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -74,64 +62,11 @@ from pyspark.sql import DataFrame, SparkSession  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
 from luxor_db_spark.catalog import TABLES, load_table  # noqa: E402
-from luxor_db_spark.registry import load_all_queries  # noqa: E402
-from luxor_db_spark.session import get_spark  # noqa: E402
 
 BASE_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 OUT_ROOT = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tmp", "scale"
 )
-RUNS = int(os.environ.get("LUXOR_SCALE_RUNS", "3"))
-SLOPE_FLAG = 1.35  # log-log slope above this = super-linear suspect
-T_MIN = 1.5  # ... but only if the x-max time is big enough to trust
-# A run that gets FASTER on 2x the input is not good news — it means the
-# physical plan changed shape between factors (e.g. AQE carrying a
-# marginal broadcast until the side outgrows the threshold, serializing
-# every smaller factor — exactly how join_skew_salted's build-side
-# broadcast was caught). Flag t[2f] < INVERT_RATIO * t[f] when t[f] is
-# large enough that it isn't job-overhead noise.
-INVERT_RATIO = 0.7
-INVERT_T_MIN = 1.5
-# Inversions with a measured, documented cause (not plan flips). Anything
-# NOT listed here fails the run (exit 1), same declared-exception contract
-# as plan_sweep._ALLOWED_REPEATS.
-EXPECTED_INVERSIONS = {
-    # docs/SCALE.md "the ×16 extension": surviving postings collapse
-    # 73.4% -> 7.6% as shingle dfs cross _DF_CAP, so the capped join has
-    # almost nothing left to do at ×16 — the documented cost/recall trade.
-    "llm_dedup_near": "df-cap stop-shingle shed on the dup-dense corpus",
-}
-
-# The expensive / scale-sensitive representatives: every key the r4
-# verdict or bench top-10 called out, plus one per family whose scale
-# story SCALE.md argues by shape (blocked dedup, banded LSH, bucketed
-# windows, salted skew join, iterative graph, sketch build).
-DEFAULT_KEYS = [
-    "flagship_q1",
-    "query_q18",
-    "query_q21",
-    "join_multiway",
-    "join_skew_salted",
-    "join_asof",
-    "agg_gini",
-    "agg_countmin",
-    "win_moving_median",
-    "win_bollinger",
-    "win_max_concurrent",
-    "win_pareto",
-    "ts_cusum_changepoint",
-    "ts_sessionize",
-    "graph_pagerank",
-    "llm_dedup_exact",
-    "llm_dedup_near",
-    "llm_minhash_lsh",
-    "llm_dedup_fuzzy",
-    "llm_knn_join",
-    "llm_cosine_topk",
-    "llm_tfidf_topterms",
-    "llm_bm25_search",
-    "llm_corpus_clean",
-]
 
 # Per-copy key offsets: column -> offset unit. One unit per ENTITY so FK
 # edges stay consistent across tables (copy c adds c*unit to both sides).
@@ -229,189 +164,3 @@ def build_amplified(
     with open(marker, "w") as fh:
         fh.write(f"factor={factor} base={base_dir}\n")
     return out_dir
-
-
-def _fit_slope(xs: list[float], ys: list[float]) -> float:
-    """OLS slope of log(y) on log(x)."""
-    lx = [math.log(x) for x in xs]
-    ly = [math.log(max(y, 1e-6)) for y in ys]
-    n = len(lx)
-    mx, my = sum(lx) / n, sum(ly) / n
-    den = sum((a - mx) ** 2 for a in lx)
-    if den == 0:
-        return float("nan")
-    return sum((a - mx) * (b - my) for a, b in zip(lx, ly)) / den
-
-
-def time_key(fn, spark: SparkSession, sf_dir: str) -> float:
-    samples = []
-    for _ in range(RUNS):
-        t0 = time.perf_counter()
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        samples.append(time.perf_counter() - t0)
-    return statistics.median(samples)
-
-
-def main(argv: list[str]) -> int:
-    factors = [1, 2, 4, 8]
-    force = "--rebuild" in argv
-    argv = [a for a in argv if a != "--rebuild"]
-    def _operand(flag: str) -> str | None:
-        """Value after ``flag``, with a usage error on a bare trailing flag
-        (previously an IndexError crash)."""
-        if flag not in argv:
-            return None
-        i = argv.index(flag)
-        if i + 1 >= len(argv) or argv[i + 1].startswith("--"):
-            print(f"usage: {flag} <value>", file=sys.stderr)
-            raise SystemExit(2)
-        val = argv[i + 1]
-        del argv[i : i + 2]
-        return val
-
-    fstr = _operand("--factors")
-    if fstr is not None:
-        # Ascending + deduped: the slope fit is order-independent but the
-        # consecutive-pair inversion check is not.
-        try:
-            factors = sorted({int(x) for x in fstr.split(",")})
-        except ValueError:
-            print("usage: --factors 1,4,16", file=sys.stderr)
-            return 2
-    ledger_path = _operand("--ledger")
-    merge = "--merge" in argv
-    argv = [a for a in argv if a != "--merge"]
-    run_all = "--all" in argv
-    argv = [a for a in argv if a != "--all"]
-    queries = load_all_queries()
-    if run_all:
-        keys = list(queries)
-    else:
-        keys = argv or [k for k in DEFAULT_KEYS if k in queries]
-    unknown = [k for k in keys if k not in queries]
-    if unknown:
-        print(f"unknown keys: {unknown}", file=sys.stderr)
-        return 2
-
-    spark = get_spark(app_name="luxor-db-spark-scale-curve")
-    dirs = {f: build_amplified(spark, f, force=force) for f in factors}
-    # Warm JVM + parquet footers once per factor dir.
-    for f in factors:
-        load_table(spark, dirs[f], "lineitem").count()
-
-    flagged = []
-    inverted = []
-    errored = []
-    results = {}
-    for key in keys:
-        times = {}
-        err = None
-        for f in factors:
-            try:
-                times[f] = round(time_key(queries[key], spark, dirs[f]), 3)
-            except Exception as exc:  # keep sweeping; report per key
-                err = f"x{f}: {type(exc).__name__}: {exc}"
-                break
-        if err is not None:
-            errored.append(key)
-            results[key] = {"times": times, "error": err}
-            print(
-                json.dumps({"key": key, "error": err[:400]}), flush=True
-            )
-            continue
-        slope = round(_fit_slope(list(times), list(times.values())), 3)
-        tmax = times[max(factors)]
-        ratio = round(tmax / max(times[min(factors)], 1e-6), 2)
-        bad = slope >= SLOPE_FLAG and tmax >= T_MIN
-        inv = [
-            (a, b)
-            for a, b in zip(factors, factors[1:])
-            if times[a] >= INVERT_T_MIN
-            and times[b] < INVERT_RATIO * times[a]
-        ]
-        if bad:
-            flagged.append(key)
-        if inv:
-            inverted.append(key)
-        results[key] = {"times": times, "slope": slope, "ratio": ratio}
-        print(
-            json.dumps(
-                {
-                    "key": key,
-                    "times_s": {str(f): t for f, t in times.items()},
-                    "slope": slope,
-                    f"t{max(factors)}_over_t{min(factors)}": ratio,
-                    "flag": bad,
-                    "inverted_at": [f"x{a}->x{b}" for a, b in inv],
-                }
-            ),
-            flush=True,
-        )
-
-    summary = {
-        "summary": "scale_curve",
-        "base": BASE_SF_DIR,
-        "factors": factors,
-        "runs": RUNS,
-        "n_keys": len(keys),
-        "flagged_superlinear": flagged,
-        "flagged_inverted": inverted,
-        "unexpected_inverted": [
-            k for k in inverted if k not in EXPECTED_INVERSIONS
-        ],
-        "errored": errored,
-    }
-    print(json.dumps(summary))
-    if ledger_path:
-        curves = {
-            k: {
-                **v,
-                "times": {str(f): t for f, t in v["times"].items()},
-            }
-            for k, v in results.items()
-        }
-        meta = summary
-        if merge and os.path.exists(ledger_path):
-            # --merge preserves the curated ledger (hand-annotated notes,
-            # warm re-measured rows): an existing per-key entry is only
-            # replaced when the fresh run is FASTER at its largest common
-            # factor (i.e. warmer, not a cold-start artifact); replaced
-            # and new entries get a runs counter.
-            with open(ledger_path) as fh:
-                old = json.load(fh)
-            merged = dict(old.get("curves", {}))
-            for k, new in curves.items():
-                prev = merged.get(k)
-                if prev is None:
-                    merged[k] = {**new, "runs": 1}
-                    continue
-                common = sorted(
-                    set(prev.get("times", {})) & set(new["times"]), key=int
-                )
-                runs = int(prev.get("runs", 1)) + 1
-                if common and new["times"][common[-1]] < prev["times"].get(
-                    common[-1], float("inf")
-                ):
-                    merged[k] = {**new, "runs": runs}
-                else:
-                    merged[k] = {**prev, "runs": runs}
-            curves = merged
-            meta = {**old.get("meta", {}), "last_merge": summary}
-        with open(ledger_path, "w") as fh:
-            json.dump(
-                {"meta": meta, "curves": curves},
-                fh,
-                indent=1,
-                sort_keys=True,
-            )
-    return (
-        1
-        if flagged
-        or errored
-        or any(k not in EXPECTED_INVERSIONS for k in inverted)
-        else 0
-    )
-
-
-if __name__ == "__main__":
-    raise SystemExit(main(sys.argv[1:]))
