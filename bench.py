@@ -140,14 +140,14 @@ def drain(df) -> int:
 # stable on a given box (~0.105 s on the round-13 driver), so a
 # contaminated round's p50 stands out even when its relative factors
 # read 1.0.
-PROBE_ROWS = int(os.environ.get("LUXOR_BENCH_PROBE_ROWS", "50000000"))
-PROBE_SAMPLES = int(os.environ.get("LUXOR_BENCH_PROBE_SAMPLES", "3"))
+PROBE_ROWS = 50_000_000
+PROBE_SAMPLES = 3
 # Threshold calibration: against the median baseline, a QUIET machine's
 # min-bracket factors cluster ~0.85–1.2 (GC pauses from the interleaved
 # key runs, turbo-state wander), so 1.3 stays above the quiet spread
 # while tripping easily on real contention (2× CPU oversubscription
 # measures ~2.1×; the BENCH_r12 contamination averaged 1.57×).
-FACTOR_MAX = float(os.environ.get("LUXOR_BENCH_FACTOR_MAX", "1.3"))
+FACTOR_MAX = 1.3
 
 
 def _probe_once(spark) -> float:
@@ -184,13 +184,13 @@ def _probe_baseline(probes: list[float]) -> float:
 # suite when the machine settles, publishing the quiet pass — a noisy
 # artifact is published only when the machine never quiesced inside
 # both bounded waits, and it stays self-flagged.
-LOAD_MAX = float(os.environ.get("LUXOR_BENCH_LOAD_MAX", "1.5"))
-QUIESCE_WAIT_S = int(os.environ.get("LUXOR_BENCH_QUIESCE_WAIT", "600"))
+LOAD_MAX = 1.5
+QUIESCE_WAIT_S = 600
 # Second-chance wait re-armed AFTER a noisy first pass. Shorter: the
 # first pass itself took minutes, so transient load has had time to
 # drain; this bound only covers the loadavg decay of our own run plus
 # a little margin.
-RETRY_WAIT_S = int(os.environ.get("LUXOR_BENCH_RETRY_WAIT", "300"))
+RETRY_WAIT_S = 300
 
 
 def _await_quiet(budget_s: int) -> tuple[float, str]:
@@ -393,9 +393,8 @@ def main() -> None:
                 "load_avg_before": load_before,
                 "load_avg_after": round(os.getloadavg()[0], 2),
                 # "quiet" / "quiet_after_wait" / "quiet_retry" / "noisy":
-                # whether the quiet-machine gate (load <=
-                # LUXOR_BENCH_LOAD_MAX, waiting up to
-                # LUXOR_BENCH_QUIESCE_WAIT s, with one bounded re-run
+                # whether the quiet-machine gate (load <= LOAD_MAX,
+                # waiting up to QUIESCE_WAIT_S s, with one bounded re-run
                 # pass after a noisy start) held. "noisy" runs are NOT
                 # comparable across rounds.
                 "load_gate": load_gate,

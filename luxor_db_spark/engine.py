@@ -18,23 +18,31 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from luxor_db_spark.catalog import DEFAULT_SF_DIR, TABLES, load_table
+from luxor_db_spark.operators.llm import (
+    ivf_build_index,
+    ivf_load_index,
+    ivf_save_index,
+    pq_build_index,
+    pq_load_index,
+    pq_save_index,
+)
 from luxor_db_spark.registry import ORACLES, load_all_queries
 from luxor_db_spark.session import configure, get_spark
 
 
-# Operator keys with an index-backed serving path. build_index,
-# load_index, and append_index all validate against this ONE whitelist
-# (r9 ADVICE: load_index accepted any key, caching an index that run()
-# then injected as index= into an operator whose signature lacks it —
-# a TypeError far from the cause).
-_INDEX_KEYS = frozenset({"llm_ann_ivf", "llm_ann_ivfpq"})
-# Lifecycle support varies by index kind; wrong-kind calls must fail at
-# the call site with the capability named, not deep in serialization.
-# (PQ append is supported as of r11: pq_query fetches its re-rank
-# originals from index.ivf.assigned, which IvfPqIndex.append grows
-# alongside the coded corpus, so appended batches are re-rank-visible.)
-_PERSISTABLE_INDEX_KEYS = frozenset({"llm_ann_ivf", "llm_ann_ivfpq"})
-_APPENDABLE_INDEX_KEYS = frozenset({"llm_ann_ivf", "llm_ann_ivfpq"})
+# Operator keys with an index-backed serving path → (builder, saver,
+# loader). build_index, save_index, load_index and append_index all
+# validate against this ONE table (r9 ADVICE: load_index accepted any
+# key, caching an index that run() then injected as index= into an
+# operator whose signature lacks it — a TypeError far from the cause).
+# Every kind supports the whole lifecycle (PQ append as of r11: pq_query
+# fetches its re-rank originals from index.ivf.assigned, which
+# IvfPqIndex.append grows alongside the coded corpus, so appended
+# batches are re-rank-visible).
+_INDEX_OPS = {
+    "llm_ann_ivf": (ivf_build_index, ivf_save_index, ivf_load_index),
+    "llm_ann_ivfpq": (pq_build_index, pq_save_index, pq_load_index),
+}
 
 
 class LuxorEngine:
@@ -119,16 +127,9 @@ class LuxorEngine:
         ``llm_ann_ivfpq`` the same call fits the IVF grid PLUS the m
         per-subspace PQ codebooks and caches the coded corpus
         (``kwargs`` e.g. ``m=`` / ``k=`` reach `pq_build_index`)."""
-        if key not in _INDEX_KEYS:
+        if key not in _INDEX_OPS:
             raise KeyError(f"no index builder for operator key {key!r}")
-        from luxor_db_spark.operators.llm import (
-            ivf_build_index,
-            pq_build_index,
-        )
-
-        builder = (
-            pq_build_index if key == "llm_ann_ivfpq" else ivf_build_index
-        )
+        builder, _, _ = _INDEX_OPS[key]
         idx = builder(self.spark, self.sf_dir, **kwargs)
         if idx is None:
             raise ValueError(
@@ -146,32 +147,19 @@ class LuxorEngine:
         fitted model + the assignment as CELL-PARTITIONED parquet, so a
         later `load_index` serves probes that scan only the probed
         cells' partitions — the durable half of the index lifecycle."""
-        if key not in _PERSISTABLE_INDEX_KEYS:
-            raise KeyError(
-                f"{key!r} indexes have no persistence path yet "
-                f"(persistable: {sorted(_PERSISTABLE_INDEX_KEYS)})"
-            )
+        if key not in _INDEX_OPS:
+            raise KeyError(f"no index saver for operator key {key!r}")
         if key not in self._indexes:
             raise KeyError(f"no built index for {key!r}; call build_index")
-        from luxor_db_spark.operators.llm import (
-            ivf_save_index,
-            pq_save_index,
-        )
-
-        saver = pq_save_index if key == "llm_ann_ivfpq" else ivf_save_index
+        _, saver, _ = _INDEX_OPS[key]
         saver(self._indexes[key], path)
 
     def load_index(self, path: str, key: str = "llm_ann_ivf"):
         """Load a persisted index and cache it for run() — no KMeans
         fit, no corpus pass; returns the index object."""
-        if key not in _PERSISTABLE_INDEX_KEYS:
+        if key not in _INDEX_OPS:
             raise KeyError(f"no index loader for operator key {key!r}")
-        from luxor_db_spark.operators.llm import (
-            ivf_load_index,
-            pq_load_index,
-        )
-
-        loader = pq_load_index if key == "llm_ann_ivfpq" else ivf_load_index
+        _, _, loader = _INDEX_OPS[key]
         idx = loader(self.spark, path)
         self._indexes[key] = idx
         return idx
@@ -187,11 +175,8 @@ class LuxorEngine:
         through the frozen PQ codebooks and the originals grow with it,
         so the exact-cosine re-rank sees appended vectors — see
         `IvfPqIndex.append`."""
-        if key not in _APPENDABLE_INDEX_KEYS:
-            raise KeyError(
-                f"no index append for operator key {key!r} "
-                f"(appendable: {sorted(_APPENDABLE_INDEX_KEYS)})"
-            )
+        if key not in _INDEX_OPS:
+            raise KeyError(f"no index append for operator key {key!r}")
         if key not in self._indexes:
             raise KeyError(
                 f"no built index for {key!r}; call build_index or "

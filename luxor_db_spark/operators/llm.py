@@ -1699,22 +1699,13 @@ def ivf_load_index(spark: SparkSession, path: str) -> IvfIndex:
     try:
         meta = spark.read.json(os.path.join(path, "meta")).first()
     except Exception as exc:
-        # Pre-r10 saves wrote a driver-LOCAL meta.json file instead of
-        # the {path}/meta JSON dataset; fall back to it so old indexes
-        # keep loading, and otherwise fail with a named error instead
-        # of an opaque AnalysisException (r10 ADVICE #3).
-        legacy = os.path.join(path, "meta.json")
-        if os.path.exists(legacy):
-            import json as _json
-
-            with open(legacy) as fh:
-                meta = _json.load(fh)
-        else:
-            raise ValueError(
-                f"no IVF index meta at {path!r} (neither the {{path}}/meta "
-                "JSON dataset nor a legacy meta.json): not an ivf_save_index "
-                "layout — rebuild and re-save the index"
-            ) from exc
+        # A named error instead of an opaque AnalysisException (r10
+        # ADVICE #3).
+        raise ValueError(
+            f"no IVF index meta at {path!r} (no {{path}}/meta JSON "
+            "dataset): not an ivf_save_index layout — rebuild and re-save "
+            "the index"
+        ) from exc
     centroids = spark.read.parquet(os.path.join(path, "centroids"))
     assigned = spark.read.parquet(os.path.join(path, "assigned"))
     model = KMeansModel.load(os.path.join(path, "model"))

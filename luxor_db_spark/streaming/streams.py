@@ -47,30 +47,12 @@ _SINK_IDS = itertools.count()
 _LAST_SINK_VIEW: dict[str, str] = {}
 
 
-def _max_files_hook() -> str | None:
-    """The LUXOR_STREAM_MAX_FILES_PER_TRIGGER TEST HOOK, or None.
-
-    The batch-split invariance suite (tests/test_stream_invariance.py)
-    sets it to replay a directory source one file per micro-batch and
-    asserts that batch-count-invariant contracts hold. Never set in
-    production paths. Callers apply it only to sources whose files
-    arrive in event-time order: a staged copy hash-partitioned by id
-    would replay out of order, and watermark eviction would change
-    results."""
-    return os.environ.get("LUXOR_STREAM_MAX_FILES_PER_TRIGGER") or None
-
-
-def _file_stream(
-    spark: SparkSession, path: str, max_files: str | None = None
-) -> DataFrame:
+def _file_stream(spark: SparkSession, path: str) -> DataFrame:
     """A Parquet directory as a file-source stream, read with its footer
     schema (``catalog.parquet_schema``, once per file version): the file
-    source requires a user-supplied schema. Without ``max_files`` every
-    file lands in micro-batch 0."""
-    rs = spark.readStream.schema(parquet_schema(spark, path))
-    if max_files:
-        rs = rs.option("maxFilesPerTrigger", int(max_files))
-    return rs.parquet(path)
+    source requires a user-supplied schema. Every file lands in
+    micro-batch 0."""
+    return spark.readStream.schema(parquet_schema(spark, path)).parquet(path)
 
 
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -99,7 +81,7 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         # append-mode watermark drops depend on nondeterministic file
         # listing order, and update-mode sinks would see one emission per
         # batch instead of one per key.)
-        raw = _file_stream(spark, path, _max_files_hook())
+        raw = _file_stream(spark, path)
     else:
         # Driver fixture layout: {sf_dir}/events.parquet is a single file.
         # The file source wants a directory, so scan sf_dir with a name
@@ -165,9 +147,7 @@ _STREAM_PARTITIONS_DEFAULT = 8
 # (stream_tumbling 1.01 s at 8 vs 1.45 s at 32; the dedup four measured
 # 19.5 s vs 47.0 s in the r12-era A/B, reconfirmed r14:
 # stream_chunk_dedup ~3.1 s at 8 vs ~7-8 s at 32).
-_PYTHON_STATE_KEYS = frozenset(
-    {"stream_stateful", "stream_windowed_topk_bounded"}
-)
+_PYTHON_STATE_KEYS = frozenset({"stream_stateful"})
 
 
 def _stream_shuffle_partitions(
@@ -592,7 +572,7 @@ def _stream_table(
     configure(spark)
     path = os.path.join(sf_dir, f"{table}.parquet")
     if os.path.isdir(path):
-        return _file_stream(spark, path, _max_files_hook())
+        return _file_stream(spark, path)
     return _file_stream(
         spark, _stage_stream_table(spark, sf_dir, table, id_col)
     )
@@ -875,13 +855,11 @@ _SURVIVOR_FLUSH_ID = 2_000_000_000
 def _stage_flushed_docs(spark: SparkSession, sf_dir: str) -> str:
     """Stage (doc_id, text) + the flush sentinel as a parquet directory
     the file source can stream, multi-part as in _stage_stream_table.
-    The sentinel is written as a SEPARATE later file so per-file
-    micro-batching (the invariance test hook) replays it last. The
-    parts' doc_id ranges all span the full corpus, so per-file replay
-    of THIS dir would arrive out of event-time order: the survivor keys
-    ignore the hook on it (r13 ADVICE #1; the in-order multi-batch
-    tests hand-stage range-ordered dirs and pass ``staged_dir=``). This
-    staging step is fixture plumbing — a real ingest pipeline's stream
+    The sentinel is written as a SEPARATE later file. The parts' doc_id
+    ranges all span the full corpus, so per-file replay of THIS dir
+    would arrive out of event-time order; the survivor keys drain it as
+    one data batch (plus the flush batch). This staging step is fixture
+    plumbing — a real ingest pipeline's stream
     never ends, so its watermark advances on its own."""
 
     def write(staged: str) -> None:
@@ -955,8 +933,7 @@ def _stream_survivors(docs: DataFrame) -> DataFrame:
     join condition, so "no matching row" ⇔ "no condemning partner in
     this band-epoch") → windowed per-doc aggregation that keeps a doc
     iff ALL its band rows came back unmatched. Factored out so the
-    batch-split invariance test can drive it from a hand-staged
-    multi-file source."""
+    state-cleanup plan test drives the exact executed pipeline."""
     a, b = _epoch_sides(_simhash_bands(docs))
     j = b.join(
         a,
@@ -1008,9 +985,7 @@ def _stream_survivors_oracle() -> str:
 
 
 @query("stream_dedup_survivors", oracle=_stream_survivors_oracle())
-def stream_dedup_survivors(
-    spark: SparkSession, sf_dir: str, *, staged_dir: str | None = None
-) -> DataFrame:
+def stream_dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING near-dup SURVIVOR filter (r9 verdict ask #6): the
     deduped-stream composition of `stream_simhash_dedup` — a document
     SURVIVES iff no lower-doc_id document within the 2-hour ingest
@@ -1041,42 +1016,13 @@ def stream_dedup_survivors(
     horizon-restricted condemning pairs — checked row for row, so the
     streaming result must be exactly the batch dedup on this corpus.
     """
-    docs = _survivor_docs(spark, sf_dir, staged_dir, "stream_dedup_survivors")
+    from luxor_db_spark.session import configure
+
+    configure(spark)
+    docs = _file_stream(spark, _stage_flushed_docs(spark, sf_dir))
     return _drain(
         _stream_survivors(docs), "stream_dedup_survivors", "append"
     )
-
-
-def _survivor_docs(
-    spark: SparkSession, sf_dir: str, staged_dir: str | None, key: str
-) -> DataFrame:
-    """The (doc_id, text) file-source stream the survivor keys drain: the
-    default flushed-docs staging, or an explicitly passed staged dir.
-
-    The split test hook applies only to an EXPLICITLY passed staged dir
-    (the in-order multi-batch tests hand-stage doc_id-range-ordered
-    parts); see _stage_flushed_docs for why the default dir always
-    drains as one data batch. A hook set for the default dir is reported
-    with a RuntimeWarning, so a multi-batch test that forgot
-    ``staged_dir=`` cannot pass hollow."""
-    import warnings
-
-    from luxor_db_spark.session import configure
-
-    mft = _max_files_hook()
-    if staged_dir is None:
-        staged_dir = _stage_flushed_docs(spark, sf_dir)
-        if mft:
-            warnings.warn(
-                f"{key}: LUXOR_STREAM_MAX_FILES_PER_TRIGGER={mft} is ignored "
-                "on the default staged dir (its parts are not in event-time "
-                "order); pass staged_dir= to replay files one batch each",
-                RuntimeWarning,
-                stacklevel=3,
-            )
-            mft = None
-    configure(spark)
-    return _file_stream(spark, staged_dir, mft)
 
 
 def _stream_chunk_survivors(docs: DataFrame) -> DataFrame:
@@ -1130,9 +1076,7 @@ def _stream_chunk_oracle() -> str:
 
 
 @query("stream_chunk_dedup", oracle=_stream_chunk_oracle())
-def stream_chunk_dedup(
-    spark: SparkSession, sf_dir: str, *, staged_dir: str | None = None
-) -> DataFrame:
+def stream_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING chunk-grain dedup (r11): the streaming twin of
     `llm_chunk_dedup` and the chunk-grain sibling of
     `stream_dedup_survivors` — documents arrive as a stream, are split
@@ -1167,7 +1111,10 @@ def stream_chunk_dedup(
     lower partners (NOT EXISTS) — the streaming result must equal the
     batch horizon-dedup row for row.
     """
-    docs = _survivor_docs(spark, sf_dir, staged_dir, "stream_chunk_dedup")
+    from luxor_db_spark.session import configure
+
+    configure(spark)
+    docs = _file_stream(spark, _stage_flushed_docs(spark, sf_dir))
     return _drain(
         _stream_chunk_survivors(docs), "stream_chunk_dedup", "append"
     )
@@ -1464,44 +1411,6 @@ def stream_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_TOPK_K = 3
-_TOPK_STATE = T.StructType(
-    [T.StructField("top", T.ArrayType(T.DoubleType()))]
-)
-_TOPK_OUT = T.StructType(
-    [
-        T.StructField("window_start", T.TimestampType()),
-        T.StructField("event_type", T.StringType()),
-        T.StructField("rk", T.IntegerType()),
-        T.StructField("value", T.DoubleType()),
-    ]
-)
-
-
-def _topk_state_fn(key, pdf_iter, state):
-    """True O(k) streaming top-k: the state per (window, type) is ONLY the
-    current k largest values — compacted on every batch, never the full
-    value list. Emits the then-current top-k each batch; with the final
-    batch's emission being the window's answer (the drain below keeps one
-    emission per key per batch and the last one is total)."""
-    top = list(state.get[0]) if state.exists else []
-    for pdf in pdf_iter:
-        top = sorted(top + pdf["value"].tolist(), reverse=True)[:_TOPK_K]
-    state.update((top,))
-    import pandas as pd
-
-    ws, et = key
-    yield pd.DataFrame(
-        {
-            "window_start": [ws] * len(top),
-            "event_type": [et] * len(top),
-            "rk": range(1, len(top) + 1),
-            "value": top,
-        }
-    )
-
-
-
 @query(
     "stream_windowed_topk",
     oracle="""
@@ -1518,54 +1427,24 @@ def _topk_state_fn(key, pdf_iter, state):
     FROM r WHERE rk <= 3
     """,
 )
-def stream_windowed_topk(
-    spark: SparkSession, sf_dir: str, *, bounded_state: bool = False
-) -> DataFrame:
+def stream_windowed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming per-window top-k: the 3 largest values per (1-hour
     window, event type).
 
-    Two implementations, identical output (equality-tested):
-
-    - default: collect_list per (window, type), sort + slice to 3 at
-      drain, exploded batch-side. State caveat: slice/sort_array apply to
-      the aggregate's OUTPUT, so the state store holds the FULL
-      per-(window, type) value list — O(rows-per-window), acceptable only
-      because windows are time-bounded (1 h).
-    - ``bounded_state=True``: custom incremental top-k via
-      ``applyInPandasWithState`` — state per key is the k-element array
-      itself, compacted on every batch (`_topk_state_fn`), i.e. true
-      O(k) state however many rows a window receives. This is the shape
-      for unbounded-cardinality windows at 100 TB; Spark's built-in
-      streaming aggregates cannot compact mid-aggregation. Each batch
-      emits the then-current top-k; the single-file fixture source
-      (maxFilesPerTrigger=1 over one file) yields exactly one data batch,
-      so the emission IS the final answer. On a multi-batch source,
-      retain the last emission per key (e.g. foreachBatch upsert by key).
+    collect_list per (window, type) in complete mode, then sort + slice
+    to 3 and explode batch-side. State: slice/sort_array apply to the
+    aggregate's OUTPUT, so the state store holds each (1-hour window,
+    type)'s FULL value list — O(rows per window), bounded only because
+    windows are time-bounded (1 h). One shuffle on the (window, type)
+    group key.
 
     Oracle-deterministic because ranks beyond tie boundaries emit
-    identical VALUES regardless of which tied row wins a slot. Both forms
-    shuffle once on the (window, type) group key. NULL values rank in
-    neither engine (the oracle filters them; collect_list skips them):
-    top-k of VALUES — NULL is not a value, and the engines disagree on
-    NULL sort order anyway.
+    identical VALUES regardless of which tied row wins a slot. NULL
+    values rank in neither engine (the oracle filters them; collect_list
+    skips them): top-k of VALUES — NULL is not a value, and the engines
+    disagree on NULL sort order anyway.
     """
     ev = stream_events(spark, sf_dir)
-    if bounded_state:
-        from pyspark.sql.streaming.state import GroupStateTimeout
-
-        keyed = ev.select(
-            F.date_trunc("hour", F.col("ts")).alias("window_start"),
-            "event_type",
-            "value",
-        )
-        out = keyed.groupBy("window_start", "event_type").applyInPandasWithState(
-            _topk_state_fn,
-            outputStructType=_TOPK_OUT,
-            stateStructType=_TOPK_STATE,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-        return _drain(out, "stream_windowed_topk_bounded", "append")
     agg = ev.groupBy(
         F.window("ts", "1 hour"), "event_type"
     ).agg(

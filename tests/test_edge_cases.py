@@ -342,23 +342,6 @@ def test_configure_right_sizes_local_shuffle_partitions_safely(spark):
         spark.conf.set("spark.sql.shuffle.partitions", original)
 
 
-def test_windowed_topk_bounded_state_form_matches_aggregate_form(spark, sf_dir):
-    """stream_windowed_topk's applyInPandasWithState variant keeps only
-    the k-element array as state (true O(k)) yet must emit exactly the
-    rows of the collect_list/sort/slice aggregate form."""
-    from luxor_db_spark.streaming.streams import stream_windowed_topk
-
-    def canon(df):
-        return sorted(
-            (str(r.window_start), r.event_type, r.rk, round(r.value, 9))
-            for r in df.collect()
-        )
-
-    agg_form = canon(stream_windowed_topk(spark, sf_dir))
-    bounded = canon(stream_windowed_topk(spark, sf_dir, bounded_state=True))
-    assert agg_form == bounded and len(agg_form) > 0
-
-
 NULL_TEXT_DOC_KEYS = None  # computed lazily below
 
 

@@ -767,43 +767,24 @@ def test_engine_ann_index_append_durable(sf_dir, tmp_path):
     )
 
 
-def test_ivf_load_index_legacy_meta_fallback(sf_dir, tmp_path):
-    """r10 ADVICE #3: indexes persisted by the pre-r10 layout (driver-
-    local meta.json instead of the {path}/meta JSON dataset) must still
-    load; a directory with NEITHER layout fails with a named error, not
-    an opaque AnalysisException."""
+def test_ivf_load_index_without_meta_dataset_names_rebuild(spark, tmp_path):
+    """r10 ADVICE #3: a directory with no {path}/meta JSON dataset — here
+    one holding only the pre-r10 driver-local meta.json, a layout nothing
+    writes any more — fails with a named error, not an opaque
+    AnalysisException."""
     import json
-    import shutil
 
     import pytest as _pytest
 
-    from luxor_db_spark.engine import LuxorEngine
-    from luxor_db_spark.operators.llm import ivf_load_index, ivf_query
+    from luxor_db_spark.operators.llm import ivf_load_index
 
-    eng = LuxorEngine.local(sf_dir)
-    idx = eng.build_index("llm_ann_ivf")
-    path = str(tmp_path / "ivfidx")
-    eng.save_index(path)
-    served = {(r.q_id, r.nb_id, r.sim) for r in ivf_query(idx).collect()}
-
-    # Rewrite the save into the LEGACY layout: meta dataset -> meta.json
-    shutil.rmtree(f"{path}/meta")
-    with open(f"{path}/meta.json", "w") as fh:
-        json.dump(
-            {
-                "ncells": idx.ncells,
-                "nprobe_default": idx.nprobe_default,
-            },
-            fh,
-        )
-    legacy = ivf_load_index(eng.spark, path)
-    assert legacy.ncells == idx.ncells
-    assert {
-        (r.q_id, r.nb_id, r.sim) for r in ivf_query(legacy).collect()
-    } == served
-
+    path = tmp_path / "ivfidx"
+    path.mkdir()
+    (path / "meta.json").write_text(
+        json.dumps({"ncells": 16, "nprobe_default": 8})
+    )
     with _pytest.raises(ValueError, match="rebuild and re-save"):
-        ivf_load_index(eng.spark, str(tmp_path / "nothing_here"))
+        ivf_load_index(spark, str(path))
 
 
 def test_engine_pq_index_append_encode_only(spark, sf_dir):
@@ -1248,7 +1229,6 @@ _ENGINE_ENV_KNOBS = {
     "SPARK_GRAFT_CPUS",
     "TZ",
     "LUXOR_DRIVER_MEM",
-    "LUXOR_STREAM_MAX_FILES_PER_TRIGGER",
 }
 
 
@@ -1289,3 +1269,34 @@ def test_engine_env_knob_census():
             assert isinstance(name, ast.Constant), f"{where}: computed env name"
             reads.setdefault(name.value, where)
     assert set(reads) == _ENGINE_ENV_KNOBS, reads
+
+
+# Keyword-only options of the registered keys. The driver calls every key
+# as ``(spark, sf_dir)``; an option is a second code path the suite has
+# to cover, so a new one must be added here in review.
+_REGISTERED_KEY_OPTIONS = {
+    "llm_ann_ivf": ("nprobe", "ncells", "index", "queries"),
+    "llm_ann_ivfpq": ("nprobe", "refine", "index", "queries", "residual"),
+    "llm_dedup_near": ("skew_safe", "df_cap", "prefix_filter", "docs"),
+    "llm_dedup_simhash": ("hamming_max", "docs"),
+    "llm_minhash_lsh": ("docs",),
+}
+
+
+def test_registered_key_option_census():
+    """The keyword-only parameters of every registered key are exactly
+    the listed options; every streaming key takes only (spark, sf_dir)."""
+    import inspect
+
+    from luxor_db_spark.registry import load_all_queries
+
+    options = {}
+    for key, fn in load_all_queries().items():
+        kw = tuple(
+            name
+            for name, p in inspect.signature(fn).parameters.items()
+            if p.kind is p.KEYWORD_ONLY
+        )
+        if kw:
+            options[key] = kw
+    assert options == _REGISTERED_KEY_OPTIONS

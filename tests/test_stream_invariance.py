@@ -16,19 +16,25 @@ results either way:
 
 Deliberately NOT here: stream_watermark / stream_stream_join (watermark
 advancement between batches legitimately drops late rows — that IS the
-contract, covered rows-only), stream_stateful / the bounded top-k
-(applyInPandasWithState emits per batch by design), checkpoint/foreach
-(batch bookkeeping is the point).
+contract, covered rows-only), stream_stateful (applyInPandasWithState
+emits per batch by design), checkpoint/foreach (batch bookkeeping is the
+point).
 
 Mechanism: rewrite the events fixture as a 3-part directory, run each
-key once with the directory consumed as a single batch and once with
-LUXOR_STREAM_MAX_FILES_PER_TRIGGER=1 (3 micro-batches), and compare
-canonical rows — also against the original single-file fixture run, so
-the rewritten fixture itself is anchored.
+key once with the directory consumed as a single batch and once inside
+``per_file_batches`` (3 micro-batches), and compare canonical rows —
+also against the original single-file fixture run, so the rewritten
+fixture itself is anchored. The engine has no batch-split option: the
+helper swaps ``streams._file_stream`` for a one-file-per-trigger reader
+around the per-file run only, and each per-file run must drain more
+micro-batches than the single-batch run, so a split that did not happen
+fails instead of passing hollow. The in-order dedup tests (simhash,
+survivors, chunk, embed) replay doc_id-range files the same way.
 """
 
 from __future__ import annotations
 
+import contextlib
 import os
 import shutil
 
@@ -47,7 +53,35 @@ INVARIANT_KEYS = [
     "stream_windowed_topk",
 ]
 
-_ENV = "LUXOR_STREAM_MAX_FILES_PER_TRIGGER"
+
+@contextlib.contextmanager
+def per_file_batches(staged: str | None = None):
+    """Within the block, every file-source directory the streaming keys
+    read replays one file per micro-batch. With ``staged``, the survivor
+    keys (stream_dedup_survivors, stream_chunk_dedup) read that
+    hand-staged directory instead of their flushed-docs staging, whose
+    parts are not in event-time order."""
+    from luxor_db_spark.catalog import parquet_schema
+    from luxor_db_spark.streaming import streams
+
+    def one_file_per_trigger(spark, path):
+        return (
+            spark.readStream.schema(parquet_schema(spark, path))
+            .option("maxFilesPerTrigger", 1)
+            .parquet(path)
+        )
+
+    with pytest.MonkeyPatch.context() as m:
+        m.setattr(streams, "_file_stream", one_file_per_trigger)
+        if staged is not None:
+            m.setattr(streams, "_stage_flushed_docs", lambda *_: staged)
+        yield
+
+
+def _n_batches(key: str) -> int:
+    from luxor_db_spark.streaming.streams import LAST_DRAIN_STATS
+
+    return LAST_DRAIN_STATS[key]["n_batches"]
 
 
 @pytest.fixture(scope="module")
@@ -81,13 +115,11 @@ def _run(spark, sf_dir: str, key: str) -> list[tuple]:
 def test_stream_result_invariant_to_batch_split(spark, key, split_sf_dir):
     original = _run(spark, SF_DIR, key)
 
-    assert os.environ.get(_ENV) is None
     one_batch = _run(spark, split_sf_dir, key)
-    os.environ[_ENV] = "1"
-    try:
+    n_one = _n_batches(key)
+    with per_file_batches():
         per_file = _run(spark, split_sf_dir, key)
-    finally:
-        del os.environ[_ENV]
+    assert _n_batches(key) > n_one, "per-file run was not split"
 
     assert one_batch == original, (
         f"[{key}] directory fixture (single batch) diverged from the "
@@ -233,12 +265,10 @@ def test_stream_simhash_inorder_multibatch_equals_single(
         os.utime(fpath, (1_000_000 + i * 100, 1_000_000 + i * 100))
 
     single = _run(spark, SF_DIR, "stream_simhash_dedup")
-    assert os.environ.get(_ENV) is None
-    os.environ[_ENV] = "1"
-    try:
+    n_single = _n_batches("stream_simhash_dedup")
+    with per_file_batches():
         ordered = _run(spark, dest, "stream_simhash_dedup")
-    finally:
-        del os.environ[_ENV]
+    assert _n_batches("stream_simhash_dedup") > n_single
     assert single and ordered == single
 
 
@@ -325,10 +355,7 @@ def test_stream_survivors_inorder_multibatch_equals_single(
 
     from pyspark.sql import functions as F
 
-    from luxor_db_spark.streaming.streams import (
-        _SURVIVOR_FLUSH_ID,
-        _stage_flushed_docs,
-    )
+    from luxor_db_spark.streaming.streams import _SURVIVOR_FLUSH_ID
 
     root = tmp_path_factory.mktemp("surv_split")
     staged = os.path.join(str(root), "staged")
@@ -362,20 +389,10 @@ def test_stream_survivors_inorder_multibatch_equals_single(
     os.utime(spath, (1_000_400, 1_000_400))
 
     single = _run(spark, SF_DIR, "stream_dedup_survivors")
-    assert os.environ.get(_ENV) is None
-    os.environ[_ENV] = "1"
-    try:
-        per_file = canonical_rows(
-            ["doc_id"],
-            [
-                tuple(r)
-                for r in QUERIES["stream_dedup_survivors"](
-                    spark, SF_DIR, staged_dir=staged
-                ).collect()
-            ],
-        )
-    finally:
-        del os.environ[_ENV]
+    n_single = _n_batches("stream_dedup_survivors")
+    with per_file_batches(staged):
+        per_file = _run(spark, SF_DIR, "stream_dedup_survivors")
+    assert _n_batches("stream_dedup_survivors") > n_single
     assert single and per_file == single
 
 
@@ -463,10 +480,7 @@ def test_stream_chunk_inorder_multibatch_equals_single(
     import glob
     import shutil as _shutil
 
-    from luxor_db_spark.streaming.streams import (
-        _SURVIVOR_FLUSH_ID,
-        LAST_DRAIN_STATS,
-    )
+    from luxor_db_spark.streaming.streams import _SURVIVOR_FLUSH_ID
 
     root = tmp_path_factory.mktemp("chunk_split")
     staged = os.path.join(str(root), "staged")
@@ -500,21 +514,10 @@ def test_stream_chunk_inorder_multibatch_equals_single(
     os.utime(spath, (1_000_400, 1_000_400))
 
     single = _run(spark, SF_DIR, "stream_chunk_dedup")
-    assert LAST_DRAIN_STATS["stream_chunk_dedup"]["n_batches"] == 2
-    assert os.environ.get(_ENV) is None
-    os.environ[_ENV] = "1"
-    try:
-        per_file = canonical_rows(
-            ["doc_id", "chunk_id", "cmd5"],
-            [
-                tuple(r)
-                for r in QUERIES["stream_chunk_dedup"](
-                    spark, SF_DIR, staged_dir=staged
-                ).collect()
-            ],
-        )
-    finally:
-        del os.environ[_ENV]
+    assert _n_batches("stream_chunk_dedup") == 2
+    with per_file_batches(staged):
+        per_file = _run(spark, SF_DIR, "stream_chunk_dedup")
+    assert _n_batches("stream_chunk_dedup") > 2
     # canonical column order is (chunk_id, cmd5, doc_id)
     for rows in (single, per_file):
         ids = [(r[2], r[0]) for r in rows]
@@ -581,12 +584,10 @@ def test_stream_embed_inorder_multibatch_equals_single(
         os.utime(fpath, (1_000_000 + i * 100, 1_000_000 + i * 100))
 
     single = _run(spark, SF_DIR, "stream_embed_dedup")
-    assert os.environ.get(_ENV) is None
-    os.environ[_ENV] = "1"
-    try:
+    n_single = _n_batches("stream_embed_dedup")
+    with per_file_batches():
         ordered = _run(spark, dest, "stream_embed_dedup")
-    finally:
-        del os.environ[_ENV]
+    assert _n_batches("stream_embed_dedup") > n_single
     assert single and ordered == single
 
 
@@ -803,19 +804,6 @@ def test_drain_records_batch_and_state_stats(spark, sf_dir):
     )
 
 
-def test_survivor_keys_warn_when_split_hook_is_ignored(spark, monkeypatch):
-    """The default staged dir always drains as one batch, so the
-    maxFilesPerTrigger hook set for it must be reported, not silently
-    dropped: a multi-batch test that forgot ``staged_dir=`` would
-    otherwise pass while testing one batch."""
-    from luxor_db_spark.streaming.streams import _survivor_docs
-
-    monkeypatch.setenv(_ENV, "1")
-    with pytest.warns(RuntimeWarning, match="staged_dir="):
-        docs = _survivor_docs(spark, SF_DIR, None, "stream_chunk_dedup")
-    assert docs.isStreaming
-
-
 def test_drain_publishes_stats_failure_as_error(
     spark, sf_dir, monkeypatch, capsys
 ):
@@ -883,12 +871,6 @@ def test_stream_clamp_exempts_python_state_drains(spark):
         )
         assert (
             streams._stream_shuffle_partitions(spark, "stream_stateful")
-            is None
-        )
-        assert (
-            streams._stream_shuffle_partitions(
-                spark, "stream_windowed_topk_bounded"
-            )
             is None
         )
     finally:
