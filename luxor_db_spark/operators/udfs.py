@@ -26,7 +26,9 @@ from luxor_db_spark.functions.exact import davg_sql, dsum_sql
 from luxor_db_spark.registry import query
 
 
-@F.udf(returnType=StringType())
+# useArrow=False pins the pickled row-at-a-time UDF this key covers, without
+# the eval-type inference from the hints (which warns on every import).
+@F.udf(returnType=StringType(), useArrow=False)
 def _price_tier(total: float) -> str:
     if total is None:
         return None

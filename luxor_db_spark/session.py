@@ -11,6 +11,15 @@ Scale notes (the 100 TB story, BASELINE.json):
   sf0.001 up to a 1000-executor cluster.
 - shuffle.partitions is a local-mode default only; on a real cluster this is
   sized to cores x executors (or left to AQE's coalescing from a high start).
+
+Python workers: for a ``local*`` master, :func:`get_spark` also sets
+``spark.python.daemon.module`` to ``luxor_db_spark.pydaemon``, so a worker
+stops re-reading ``pyspark.zip`` and the spark-core jar on every task, and
+puts the package root first in ``spark.executorEnv.PYTHONPATH``, so the
+daemon module imports whatever the working directory. Both are static
+SparkContext confs, so a session the driver hands in keeps Spark's default
+daemon. They are local-only because the package root is a driver-side path
+that a cluster executor need not have.
 """
 
 from __future__ import annotations
@@ -18,6 +27,7 @@ from __future__ import annotations
 import os
 import time
 
+from pyspark import SparkConf
 from pyspark.sql import SparkSession
 
 # Runtime-settable confs (safe to apply to a session we didn't build).
@@ -38,6 +48,32 @@ _RUNTIME_CONFS: dict[str, str] = {
     # TimestampType, matching DuckDB's ns→µs truncation (FIXTURES.md).
     "spark.sql.legacy.parquet.nanosAsLong": "true",
 }
+
+
+# Directory holding the ``luxor_db_spark`` package, for the workers' path.
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _python_worker_confs(
+    master: str, executor_pythonpath: str | None
+) -> dict[str, str]:
+    """Static confs that start Python workers from ``luxor_db_spark.pydaemon``
+    (see the module docstring); ``{}`` for a non-local master.
+
+    The daemon module, not ``spark.python.worker.module``: ``pyspark/daemon.py``
+    only honours a worker module whose name starts with ``pyspark``. The
+    package root goes ahead of ``executor_pythonpath``, the caller's
+    ``spark.executorEnv.PYTHONPATH``, which is kept.
+    """
+    if not master.startswith("local"):
+        return {}
+    path = _PACKAGE_ROOT
+    if executor_pythonpath:
+        path += os.pathsep + executor_pythonpath
+    return {
+        "spark.python.daemon.module": "luxor_db_spark.pydaemon",
+        "spark.executorEnv.PYTHONPATH": path,
+    }
 
 
 def configure(spark: SparkSession) -> SparkSession:
@@ -121,6 +157,11 @@ def get_spark(
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.ui.enabled", "false")
     )
-    for k, v in _RUNTIME_CONFS.items():
+    # SparkConf() reads the conf of a JVM this process already runs; before
+    # the first context it is empty and starts nothing, so a value given
+    # only at JVM launch (spark-defaults.conf, --conf) is not seen here.
+    existing = SparkConf().get("spark.executorEnv.PYTHONPATH")
+    confs = {**_RUNTIME_CONFS, **_python_worker_confs(master, existing)}
+    for k, v in confs.items():
         builder = builder.config(k, v)
     return configure(builder.getOrCreate())
